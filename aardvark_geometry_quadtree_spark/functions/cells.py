@@ -69,11 +69,6 @@ def quadrant(cx, cy) -> Column:
     return (F.pmod(_c(cx), F.lit(2)) + F.pmod(_c(cy), F.lit(2)) * 2).cast("int")
 
 
-def child_coord(c, quadbit) -> Column:
-    """Child cell index: c*2 + bit."""
-    return (_c(c) * 2 + _c(quadbit)).cast("long")
-
-
 # ---------------------------------------------------------------------------
 # bounds (Prelude.fs:113-133: GetBoundsForExponent) — max-exclusive Box2l
 # ---------------------------------------------------------------------------

@@ -49,6 +49,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import query as Q
 from .build import _INT_BUFFER_TYPES, packable_layer_types
 
 _META_COLS = ("bx", "by", "e", "w", "n_samples", "occ")
@@ -1733,31 +1734,25 @@ def knn_join_blocks(
 
 
 # ---------------------------------------------------------------------------
-# queries over blocks (window / polygon), block-pruned + HOF per-cell tests
+# window queries over blocks: block prune + the sample-path query
 # ---------------------------------------------------------------------------
 
-def _block_bounds(e_col, w_col):
-    """World-space [min, max) bounds of a block row (Columns)."""
-    side = F.pow(F.lit(2.0), e_col.cast("double")) * w_col.cast("double")
-    return side
+def _prune_blocks(blocks: DataFrame, node_outside) -> DataFrame:
+    """Drop blocks whose world extent [x0,x1)x[y0,y1) the query's
+    ``node_outside`` (the same function the sample path hands to
+    ``query.query_generic``) declares fully outside. A plain Catalyst filter
+    on (bx, by, e, w) — parquet min/max prunable, and it sits below the
+    unpack's posexplode, so pruned blocks are never exploded.
 
-
-def _prune_blocks_bbox(blocks: DataFrame, bx0: float, by0: float, bx1: float, by1: float) -> DataFrame:
-    """Keep blocks whose world bbox intersects [bx0,bx1]x[by0,by1]: a plain
-    Catalyst filter on (bx, by, e, w) — parquet min/max prunable.
-
-    The max side is INCLUSIVE (block min <= bbox max), matching
-    :func:`inside_box_blocks`: the per-cell predicates downstream test
-    inclusive bounds, and a sample position exactly on the bbox max can sit
-    on a block's min edge (rel=(0,0) with the polygon bbox max on a block
-    boundary) — a strict prune would drop that cell."""
-    side = _block_bounds(F.col("e"), F.col("w"))
+    Callers run only ``sample_inside`` on the surviving cells: re-testing
+    ``node_outside`` per cell drops no cell the fine test keeps (a cell
+    fully outside has its position, rel < 1, outside too), and re-testing
+    it measured ~0.3 s slower per small ``near_line_blocks`` query
+    (perfbench window_queries spans, 4 cores)."""
+    side = F.pow(F.lit(2.0), F.col("e").cast("double")) * F.col("w").cast("double")
     x0 = F.col("bx").cast("double") * side
     y0 = F.col("by").cast("double") * side
-    return blocks.filter(
-        (x0 <= F.lit(bx1)) & (x0 + side > F.lit(bx0))
-        & (y0 <= F.lit(by1)) & (y0 + side > F.lit(by0))
-    )
+    return blocks.filter(~node_outside(x0, y0, x0 + side, y0 + side))
 
 
 def inside_box_blocks(
@@ -1769,26 +1764,11 @@ def inside_box_blocks(
     rel: tuple[float, float] = (0.5, 0.5),
     layers: list[str] | None = None,
 ) -> DataFrame:
-    """Cells of a block raster whose SampleMode position lies in the box
-    (inclusive bounds — exactly ``query.inside_box``'s predicate,
-    Query.fs:450), returned as unpacked sample rows.
-
-    Phase 1 prunes whole blocks by bbox overlap (plain Catalyst filter on
-    the block key — parquet min/max prunable, same shape as the sample
-    path's ``inside_box_pushdown``); phase 2 unpacks only surviving blocks
-    (JVM posexplode) and applies the exact position predicate in codegen.
-    """
-    if layers is None:
-        layers, _ = _block_layers(blocks)
-    pruned = _prune_blocks_bbox(blocks, float(x0), float(y0), float(x1), float(y1))
-    cells = unpack_blocks(pruned, layers)
-    scale = F.pow(F.lit(2.0), F.col("e").cast("double"))
-    px = (F.col("cx").cast("double") + F.lit(rel[0])) * scale
-    py = (F.col("cy").cast("double") + F.lit(rel[1])) * scale
-    return cells.filter(
-        (px >= F.lit(float(x0))) & (px <= F.lit(float(x1)))
-        & (py >= F.lit(float(y0))) & (py <= F.lit(float(y1)))
-    )
+    """J6 on the block path: ``query.inside_box`` over the unpacked cells of
+    the blocks that overlap the box (inclusive bounds, Query.fs:450)."""
+    node_outside, _ = Q._box_predicates(x0, y0, x1, y1)
+    cells = unpack_blocks(_prune_blocks(blocks, node_outside), layers)
+    return Q.inside_box(cells, x0, y0, x1, y1, rel)
 
 
 def inside_polygon_blocks(
@@ -1797,28 +1777,12 @@ def inside_polygon_blocks(
     rel: tuple[float, float] = (0.5, 0.5),
     layers: list[str] | None = None,
 ) -> DataFrame:
-    """Cells of a block raster inside a polygon — the block-path equivalent
-    of ``query.inside_polygon`` (same winding predicate, same SampleMode
-    position), returned as unpacked sample rows for oracle parity.
-
-    Phase 1: block-bbox vs polygon-bbox prune (Catalyst filter, scan-
-    prunable). Phase 2: JVM posexplode + the unrolled winding expression —
-    per-cell test stays in whole-stage codegen, no Python."""
-    from .query import _normalize_polygon, _winding_expr
-
-    verts = _normalize_polygon(verts)
-    xs = [v[0] for v in verts]
-    ys = [v[1] for v in verts]
-    pruned = _prune_blocks_bbox(blocks, min(xs), min(ys), max(xs), max(ys))
-    cells = unpack_blocks(pruned, layers)
-    scale = F.pow(F.lit(2.0), F.col("e").cast("double"))
-    px = (F.col("cx").cast("double") + F.lit(rel[0])) * scale
-    py = (F.col("cy").cast("double") + F.lit(rel[1])) * scale
-    in_bbox = (
-        (px >= F.lit(min(xs))) & (px <= F.lit(max(xs)))
-        & (py >= F.lit(min(ys))) & (py <= F.lit(max(ys)))
-    )
-    return cells.filter(in_bbox & _winding_expr(px, py, verts))
+    """J7 on the block path: ``query.inside_polygon``'s predicates — its
+    ``node_outside`` on the block extent, its ``sample_inside`` (bbox +
+    winding, whole-stage codegen, no Python) on the unpacked cells."""
+    node_outside, sample_inside = Q._polygon_predicates(Q._normalize_polygon(verts))
+    cells = unpack_blocks(_prune_blocks(blocks, node_outside), layers)
+    return Q.query_generic(cells, sample_inside, rel=rel)
 
 
 def near_line_blocks(
@@ -1831,106 +1795,37 @@ def near_line_blocks(
     rel: tuple[float, float] = (0.5, 0.5),
     layers: list[str] | None = None,
 ) -> DataFrame:
-    """J8 on the block path: cells whose SampleMode position is within
-    ``dist`` of the infinite line (``query.near_line`` semantics,
-    Query.fs:477-488), over a block staging table.
-
-    Phase 1 prunes whole BLOCKS with the same all-corners-on-one-side band
-    test the sample path applies per cell — a plain Catalyst filter on
-    (bx, by, e, w), parquet min/max prunable, so the steady-state block
-    staging feeds this query without a full unpack. Phase 2 unpacks only
-    surviving blocks and applies the exact codegen distance predicate."""
-    if layers is None:
-        layers, _ = _block_layers(blocks)
-    if dx * dx + dy * dy == 0:
-        raise ValueError("near_line_blocks: zero-length direction")  # r5 ADVICE
-    norm = (dx * dx + dy * dy) ** 0.5
-    ux, uy = dx / norm, dy / norm
-
-    def signed(px, py):
-        return F.lit(ux) * (py - F.lit(float(oy))) - F.lit(uy) * (px - F.lit(float(ox)))
-
-    side = _block_bounds(F.col("e"), F.col("w"))
-    x0 = F.col("bx").cast("double") * side
-    y0 = F.col("by").cast("double") * side
-    corners = [signed(x0, y0), signed(x0 + side, y0),
-               signed(x0, y0 + side), signed(x0 + side, y0 + side)]
-    all_above = corners[0] > F.lit(float(dist))
-    all_below = corners[0] < F.lit(-float(dist))
-    for c in corners[1:]:
-        all_above = all_above & (c > F.lit(float(dist)))
-        all_below = all_below & (c < F.lit(-float(dist)))
-    pruned = blocks.filter(~(all_above | all_below))
-    cells = unpack_blocks(pruned, layers)
-    scale = F.pow(F.lit(2.0), F.col("e").cast("double"))
-    px = (F.col("cx").cast("double") + F.lit(rel[0])) * scale
-    py = (F.col("cy").cast("double") + F.lit(rel[1])) * scale
-    return cells.filter(F.abs(signed(px, py)) <= F.lit(float(dist)))
-
-
-def _prune_blocks_cell(blocks: DataFrame, qcx: int, qcy: int, qe: int) -> DataFrame:
-    """Keep blocks whose world extent intersects the query CELL's extent
-    (max-EXCLUSIVE on both sides — cell boxes, unlike the position-bbox
-    prune which must keep the inclusive max edge). Plain Catalyst filter
-    on (bx, by, e, w); products of powers of two are double-exact."""
-    side = _block_bounds(F.col("e"), F.col("w"))
-    x0 = F.col("bx").cast("double") * side
-    y0 = F.col("by").cast("double") * side
-    qs = float(2.0 ** qe)
-    qx0, qx1 = qcx * qs, (qcx + 1) * qs
-    qy0, qy1 = qcy * qs, (qcy + 1) * qs
-    return blocks.filter(
-        (x0 < F.lit(qx1)) & (x0 + side > F.lit(qx0))
-        & (y0 < F.lit(qy1)) & (y0 + side > F.lit(qy0))
-    )
+    """J8 on the block path: ``query.near_line``'s predicates — its
+    ``node_outside`` (all block corners on one side of the band) on the
+    block extent, its exact distance test on the unpacked cells
+    (Query.fs:477-488)."""
+    node_outside, sample_inside = Q._line_predicates(ox, oy, dx, dy, dist)
+    cells = unpack_blocks(_prune_blocks(blocks, node_outside), layers)
+    return Q.query_generic(cells, sample_inside, rel=rel)
 
 
 def inside_cell_blocks(
     blocks: DataFrame, qcx: int, qcy: int, qe: int,
     layers: list[str] | None = None,
 ) -> DataFrame:
-    """J4 on the block path: cells fully inside the query cell
-    (ancestor-or-equal containment, ``query.inside_cell`` semantics,
-    Query.fs:439-444). Block prune: extent intersection + ``e <= qe``
-    (a coarser-than-query sample can never be inside it); then the exact
-    integer containment predicate on unpacked survivors."""
-    from ..functions import cells as C
-
-    if layers is None:
-        layers, _ = _block_layers(blocks)
-    pruned = _prune_blocks_cell(blocks, qcx, qcy, qe).filter(
-        F.col("e") <= F.lit(int(qe))
-    )
-    cells = unpack_blocks(pruned, layers)
-    return cells.filter(
-        C.is_ancestor_or_equal(
-            F.lit(qcx), F.lit(qcy), F.lit(qe),
-            F.col("cx"), F.col("cy"), F.col("e"),
-        )
-    )
+    """J4 on the block path: ``query.inside_cell`` over the unpacked cells of
+    the blocks that overlap the query cell at ``e <= qe`` (a coarser-than-
+    query sample can never be inside it; Query.fs:439-444)."""
+    pruned = _prune_blocks(blocks, Q._cell_outside(qcx, qcy, qe))
+    cells = unpack_blocks(pruned.filter(F.col("e") <= F.lit(int(qe))), layers)
+    return Q.inside_cell(cells, qcx, qcy, qe)
 
 
 def intersects_cell_blocks(
     blocks: DataFrame, qcx: int, qcy: int, qe: int,
     layers: list[str] | None = None,
 ) -> DataFrame:
-    """J5 on the block path: cells whose area intersects the query cell —
-    INCLUDING the supersampling fallback where the query cell is finer
-    than the data and the coarser containing sample answers
-    (``query.intersects_cell`` semantics, Query.fs:575-592: no exponent
-    restriction in the prune, so coarser-parent blocks survive it)."""
-    from ..functions import cells as C
-
-    if layers is None:
-        layers, _ = _block_layers(blocks)
-    pruned = _prune_blocks_cell(blocks, qcx, qcy, qe)
-    cells = unpack_blocks(pruned, layers)
-    return cells.filter(
-        C.cells_intersect(
-            F.lit(qcx), F.lit(qcy), F.lit(qe),
-            F.col("cx"), F.col("cy"), F.col("e"),
-        )
-    )
+    """J5 on the block path: ``query.intersects_cell`` over the unpacked cells
+    of the blocks that overlap the query cell — no exponent restriction, so
+    coarser-parent blocks survive and the supersampling fallback holds
+    (Query.fs:575-592)."""
+    cells = unpack_blocks(_prune_blocks(blocks, Q._cell_outside(qcx, qcy, qe)), layers)
+    return Q.intersects_cell(cells, qcx, qcy, qe)
 
 
 def polygon_count_blocks(
@@ -1948,17 +1843,14 @@ def polygon_count_blocks(
     x 4 edges), and the posexplode alternative materializes 16.7M struct
     rows (measured 31s); the numpy kernel does the same arithmetic
     vectorized in ~0.9s and parallelizes per block partition. Semantics ==
-    ``query._winding_expr`` exactly (nonzero winding, boundary counted
-    inside, polygon-bbox pre-filter) — parity-tested against
-    ``inside_polygon`` per cell.
+    ``query.inside_polygon`` exactly (``query._winding_np`` is the numpy
+    twin of its winding expression, polygon-bbox pre-filter) — parity-tested
+    against ``inside_polygon`` per cell.
     """
-    from .query import _normalize_polygon
-
-    verts = _normalize_polygon(verts)
-    xs = [v[0] for v in verts]
-    ys = [v[1] for v in verts]
-    bx0, by0, bx1, by1 = min(xs), min(ys), max(xs), max(ys)
-    pruned = _prune_blocks_bbox(blocks, bx0, by0, bx1, by1)
+    verts = Q._normalize_polygon(verts)
+    bx0, by0, bx1, by1 = Q._polygon_bbox(verts)
+    node_outside, _ = Q._polygon_predicates(verts)
+    pruned = _prune_blocks(blocks, node_outside)
     rx, ry = float(rel[0]), float(rel[1])
 
     def _count(iterator):
@@ -1976,21 +1868,8 @@ def polygon_count_blocks(
                 i = np.arange(w * w)
                 px = (bx * w + (i % w)[None, :] + rx) * side
                 py = (by * w + (i // w)[None, :] + ry) * side
-                wind = np.zeros(px.shape, dtype=np.int64)
-                on_edge = np.zeros(px.shape, dtype=bool)
-                for j in range(len(verts)):
-                    x1, y1 = verts[j]
-                    x2, y2 = verts[(j + 1) % len(verts)]
-                    cross = (x2 - x1) * (py - y1) - (y2 - y1) * (px - x1)
-                    wind += np.where((y1 <= py) & (py < y2) & (cross > 0), 1, 0)
-                    wind -= np.where((y2 <= py) & (py < y1) & (cross < 0), 1, 0)
-                    within = (
-                        (px >= min(x1, x2)) & (px <= max(x1, x2))
-                        & (py >= min(y1, y2)) & (py <= max(y1, y2))
-                    )
-                    on_edge |= (cross == 0) & within
                 in_bbox = (px >= bx0) & (px <= bx1) & (py >= by0) & (py <= by1)
-                n += int((occ & in_bbox & ((wind != 0) | on_edge)).sum())
+                n += int((occ & in_bbox & Q._winding_np(px, py, verts)).sum())
             yield pd.DataFrame({"n": [n]})
 
     per_block = pruned.select("bx", "by", "e", "w", "occ").mapInPandas(_count, "n long")

@@ -1,12 +1,14 @@
 """Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard,
 embedding-cosine near-dup.
 
-Design for 100 TB: everything is built-in Column expressions (md5-based
-hashing so results are engine-independent and oracle-checkable), candidate
-generation is equi-join on band/bucket keys (never an all-pairs cross join),
-and exact similarity runs only on LSH candidates. Skewed bands (a viral
-boilerplate shingle) are handled by AQE skew-join; the band key space can be
-salted by raising ``bands``.
+Design for 100 TB: hashing is md5-based, so results are engine-independent
+and oracle-checkable. The MinHash and SimHash-64 signature passes are
+``mapInArrow`` kernels (hashlib md5 over Arrow batches); everything else is
+built-in Column expressions. Candidate generation is equi-join on
+band/bucket keys (never an all-pairs cross join), and exact similarity runs
+only on LSH candidates. Skewed bands (a viral boilerplate shingle) are
+handled by AQE skew-join; the band key space can be salted by raising
+``bands``.
 """
 
 from __future__ import annotations
@@ -65,31 +67,6 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     pat = r"(?:^|(?<= ))(?=(" + r"[^ ]*" + (r" [^ ]*" * (n - 1)) + r"))"
     grams = F.regexp_extract_all(norm, F.lit(pat), 1)
     return F.when(F.size(w) >= n, grams).otherwise(F.array(norm))
-
-
-def minhash_strs(shingles: Column, k: int = 8) -> list[Column]:
-    """k MinHash values: min over shingles of md5(shingle + '#' + i).
-
-    md5-as-permutation keeps the signature engine-independent (the DuckDB
-    oracle computes the identical strings); string-min is a valid min-wise
-    hash family for set resemblance (Broder '97 construction with md5 as
-    the random permutation).
-    """
-    def _mk(i: int):
-        # factory closure: a default-arg lambda (s, i=i) would be seen by
-        # Spark as a 2-arg HOF lambda and bind i to the array-index column
-        suffix = f"#{i}"
-        return lambda s: F.md5(F.concat(s, F.lit(suffix)))
-
-    return [F.array_min(F.transform(shingles, _mk(i))) for i in range(k)]
-
-
-def with_minhash(df: DataFrame, text_col: str = "text", k: int = 8, n: int = 3) -> DataFrame:
-    sh = word_shingles(F.col(text_col), n)
-    out = df.withColumn("_sh", sh)
-    for i, c in enumerate(minhash_strs(F.col("_sh"), k)):
-        out = out.withColumn(f"mh_{i}", c)
-    return out
 
 
 def minhash_table(
@@ -292,8 +269,9 @@ def simhash16(text: Column) -> Column:
     h = lambda t: F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("long")  # noqa: E731
 
     def _mk_merge(b: int):
-        # factory closure — see minhash_strs: default-arg lambdas change the
-        # HOF lambda arity and silently rebind the extra arg to a Column
+        # factory closure, not a default-arg lambda (acc, t, b=b): Spark
+        # reads the lambda's arity, so the extra arg would make it a 3-arg
+        # HOF lambda and silently rebind b to a Column
         return lambda acc, t: acc + (F.shiftright(h(t), b) % 2) * 2 - 1
 
     out = F.lit(0).cast("long")

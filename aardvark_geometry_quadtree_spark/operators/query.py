@@ -21,6 +21,7 @@ Every sample's "position" is ``(c + rel) * 2^e`` per SampleMode
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -67,8 +68,11 @@ def query_generic(
     """
     px = C.sample_pos(F.col("cx"), F.col("e"), rel[0])
     py = C.sample_pos(F.col("cy"), F.col("e"), rel[1])
-    x0, y0 = C.cell_min(F.col("cx"), F.col("e")), C.cell_min(F.col("cy"), F.col("e"))
-    x1, y1 = C.cell_max(F.col("cx"), F.col("e")), C.cell_max(F.col("cy"), F.col("e"))
+    if node_outside is not None or node_inside is not None:
+        # only when used: every Column op is a Python->JVM round trip, and
+        # the block path (blocks.py) passes sample_inside alone
+        x0, y0 = C.cell_min(F.col("cx"), F.col("e")), C.cell_min(F.col("cy"), F.col("e"))
+        x1, y1 = C.cell_max(F.col("cx"), F.col("e")), C.cell_max(F.col("cy"), F.col("e"))
     df = samples
     if node_outside is not None:
         df = df.filter(~node_outside(x0, y0, x1, y1))
@@ -148,12 +152,28 @@ def inside_box(
     """
     px = C.sample_pos(F.col("cx"), F.col("e"), rel[0])
     py = C.sample_pos(F.col("cy"), F.col("e"), rel[1])
-    return samples.filter(
-        (px >= F.lit(float(minx)))
-        & (px <= F.lit(float(maxx)))
-        & (py >= F.lit(float(miny)))
-        & (py <= F.lit(float(maxy)))
-    )
+    _, sample_inside = _box_predicates(minx, miny, maxx, maxy)
+    return samples.filter(sample_inside(px, py))
+
+
+def _box_predicates(minx: float, miny: float, maxx: float, maxy: float):
+    """(node_outside, sample_inside) of the closed box [minx,maxx]x[miny,maxy].
+
+    A node with bounds [x0,x1)x[y0,y1) is fully outside iff it ends at or
+    before the box min or starts strictly after the box max: the max side
+    stays INCLUSIVE because a sample position exactly on the box max (rel=0
+    puts it on a node's min edge) is inside."""
+    bx0, by0, bx1, by1 = float(minx), float(miny), float(maxx), float(maxy)
+
+    def node_outside(x0, y0, x1, y1):
+        return (x1 <= F.lit(bx0)) | (x0 > F.lit(bx1)) | (y1 <= F.lit(by0)) | (y0 > F.lit(by1))
+
+    def sample_inside(px, py):
+        return (
+            (px >= F.lit(bx0)) & (px <= F.lit(bx1)) & (py >= F.lit(by0)) & (py <= F.lit(by1))
+        )
+
+    return node_outside, sample_inside
 
 
 def inside_box_pushdown(
@@ -209,6 +229,20 @@ def inside_cell(samples: DataFrame, qcx: int, qcy: int, qe: int) -> DataFrame:
     )
 
 
+def _cell_outside(qcx: int, qcy: int, qe: int):
+    """node_outside of the query cell's world extent: disjointness of two
+    max-EXCLUSIVE boxes (cell areas, unlike the position box of
+    :func:`_box_predicates`). Products of powers of two are double-exact."""
+    qs = float(2.0 ** qe)
+    qx0, qx1 = qcx * qs, (qcx + 1) * qs
+    qy0, qy1 = qcy * qs, (qcy + 1) * qs
+
+    def node_outside(x0, y0, x1, y1):
+        return (x1 <= F.lit(qx0)) | (x0 >= F.lit(qx1)) | (y1 <= F.lit(qy0)) | (y0 >= F.lit(qy1))
+
+    return node_outside
+
+
 def intersects_cell(samples: DataFrame, qcx: int, qcy: int, qe: int) -> DataFrame:
     """Samples whose cell area intersects the query cell.
 
@@ -252,6 +286,45 @@ def _winding_expr(px, py, verts: list[tuple[float, float]]):
     return (wind != 0) | on_edge
 
 
+def _winding_np(px, py, verts: list[tuple[float, float]]):
+    """:func:`_winding_expr` over numpy position arrays (any matching shape)
+    for the Arrow-batch kernels: the same edge arithmetic in the same order,
+    the same nonzero rule, boundary points inside. Pinned point for point
+    against the Catalyst expression (tests/test_queries.py)."""
+    n = len(verts)
+    wind = np.zeros(np.shape(px), dtype=np.int64)
+    on_edge = np.zeros(np.shape(px), dtype=bool)
+    for i in range(n):
+        x1, y1 = (float(v) for v in verts[i])
+        x2, y2 = (float(v) for v in verts[(i + 1) % n])
+        cross = (x2 - x1) * (py - y1) - (y2 - y1) * (px - x1)
+        wind += (y1 <= py) & (py < y2) & (cross > 0)
+        wind -= (y2 <= py) & (py < y1) & (cross < 0)
+        within_seg = (
+            (px >= min(x1, x2)) & (px <= max(x1, x2))
+            & (py >= min(y1, y2)) & (py <= max(y1, y2))
+        )
+        on_edge |= (cross == 0) & within_seg
+    return (wind != 0) | on_edge
+
+
+def _polygon_bbox(verts: list[tuple[float, float]]) -> tuple[float, float, float, float]:
+    xs = [float(v[0]) for v in verts]
+    ys = [float(v[1]) for v in verts]
+    return min(xs), min(ys), max(xs), max(ys)
+
+
+def _polygon_predicates(verts: list[tuple[float, float]]):
+    """(node_outside, sample_inside) of a NORMALIZED polygon: bbox prune,
+    then bbox + exact winding on the position."""
+    box_outside, in_bbox = _box_predicates(*_polygon_bbox(verts))
+
+    def sample_inside(px, py):
+        return in_bbox(px, py) & _winding_expr(px, py, verts)
+
+    return box_outside, sample_inside
+
+
 def inside_polygon(
     samples: DataFrame,
     verts: list[tuple[float, float]],
@@ -265,20 +338,7 @@ def inside_polygon(
     Query.InsidePolygon (Query.fs:454-468) incl. vertex dedup + CCW
     normalization (Polygon2d.WithoutMultiplePoints / IsCcw).
     """
-    verts = _normalize_polygon(verts)
-    xs = [float(v[0]) for v in verts]
-    ys = [float(v[1]) for v in verts]
-    bx0, by0, bx1, by1 = min(xs), min(ys), max(xs), max(ys)
-
-    def node_outside(x0, y0, x1, y1):
-        return (x1 <= F.lit(bx0)) | (x0 > F.lit(bx1)) | (y1 <= F.lit(by0)) | (y0 > F.lit(by1))
-
-    def sample_inside(px, py):
-        in_bbox = (
-            (px >= F.lit(bx0)) & (px <= F.lit(bx1)) & (py >= F.lit(by0)) & (py <= F.lit(by1))
-        )
-        return in_bbox & _winding_expr(px, py, verts)
-
+    node_outside, sample_inside = _polygon_predicates(_normalize_polygon(verts))
     return query_generic(samples, sample_inside, node_outside=node_outside, rel=rel)
 
 
@@ -320,9 +380,6 @@ def pip_join(
     2 is a vectorized numpy winding test over the surviving (sample, polygon)
     pairs in an Arrow-batched kernel. Returns samples + poly_id.
     """
-    import numpy as np
-    import pandas as pd
-
     px = C.sample_pos(F.col("cx"), F.col("e"), rel[0])
     py = C.sample_pos(F.col("cy"), F.col("e"), rel[1])
     pts = samples.withColumn("_px", px).withColumn("_py", py)
@@ -353,24 +410,8 @@ def pip_join(
             # all its candidate points at once
             for pid, idx in pdf.groupby("poly_id").indices.items():
                 row = pdf.iloc[idx[0]]
-                vx = np.asarray(row["xs"], dtype=np.float64)
-                vy = np.asarray(row["ys"], dtype=np.float64)
-                xx, yy = x[idx], y[idx]
-                wind = np.zeros(len(idx), dtype=np.int64)
-                on_edge = np.zeros(len(idx), dtype=bool)
-                n = len(vx)
-                for i in range(n):
-                    x1, y1 = vx[i], vy[i]
-                    x2, y2 = vx[(i + 1) % n], vy[(i + 1) % n]
-                    cross = (x2 - x1) * (yy - y1) - (y2 - y1) * (xx - x1)
-                    wind += np.where((y1 <= yy) & (yy < y2) & (cross > 0), 1, 0)
-                    wind -= np.where((y2 <= yy) & (yy < y1) & (cross < 0), 1, 0)
-                    seg = (
-                        (xx >= min(x1, x2)) & (xx <= max(x1, x2))
-                        & (yy >= min(y1, y2)) & (yy <= max(y1, y2))
-                    )
-                    on_edge |= (cross == 0) & seg
-                inside[idx] = (wind != 0) | on_edge
+                verts = list(zip(row["xs"], row["ys"]))
+                inside[idx] = _winding_np(x[idx], y[idx], verts)
             yield pdf.loc[inside, keep]
 
     return cand.mapInPandas(_pip, out_schema)
@@ -396,6 +437,16 @@ def near_line(
     four corners sit on one side of the band — codegen'd corner distance
     checks; the fine phase cross-product distance on the position is exact.
     """
+    node_outside, sample_inside = _line_predicates(ox, oy, dx, dy, dist)
+    return query_generic(samples, sample_inside, node_outside=node_outside, rel=rel)
+
+
+def _line_predicates(ox: float, oy: float, dx: float, dy: float, dist: float):
+    """(node_outside, sample_inside) of the band within ``dist`` of the line
+    through (ox,oy) along (dx,dy). A zero-length direction has no line: it
+    raises here, at plan-build time, in both layouts."""
+    if dx * dx + dy * dy == 0:
+        raise ValueError("near_line: zero-length direction")
     norm = (dx * dx + dy * dy) ** 0.5
     ux, uy = dx / norm, dy / norm
 
@@ -414,7 +465,7 @@ def near_line(
     def sample_inside(px, py):
         return F.abs(signed(px, py)) <= F.lit(float(dist))
 
-    return query_generic(samples, sample_inside, node_outside=node_outside, rel=rel)
+    return node_outside, sample_inside
 
 
 # ---------------------------------------------------------------------------

@@ -137,12 +137,3 @@ def winnow_fingerprints(
         .agg(F.array_sort(F.collect_set("_fp")).alias("fingerprints"))
     )
 
-
-def with_textstats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
-    return (
-        df.withColumn("n_tokens", token_count(t))
-        .withColumn("lang_pred", lang_id(t))
-        .withColumn("quality", quality_score(t))
-        .withColumn("fp", fingerprint(t))
-    )

@@ -32,6 +32,19 @@ def _mk(spark, seed, n=400, span=40, holes=True):
     )
 
 
+def _dense(spark, span=40):
+    """Every cell of [-span/2, span/2)^2 at e=0, holes as in :func:`_mk`.
+    ``_mk``'s id lattice hits few distinct cells; query edges placed on
+    block boundaries need cells there."""
+    return spark.range(span * span).select(
+        (F.col("id") % span - span // 2).alias("cx"),
+        (F.floor(F.col("id") / span) - span // 2).cast("long").alias("cy"),
+        F.lit(0).cast("int").alias("e"),
+        F.when((F.col("id") % 7) == 0, F.lit(None)).otherwise(F.col("id") * 1.5).alias("height"),
+        F.when((F.col("id") % 5) == 0, F.lit(None)).otherwise(F.col("id") * 3).cast("bigint").alias("n"),
+    )
+
+
 def _cells(df, layers=("height", "n")):
     return {
         (r["cx"], r["cy"], r["e"]): tuple(r[l] for l in layers) for r in df.collect()
@@ -94,14 +107,21 @@ def test_pyramid_blocks_include_base_and_level_cap(spark):
 
 
 def test_polygon_blocks_parity(spark):
-    s = _mk(spark, 5)
-    blk = B.pack_blocks(s, bits=3)
-    poly = [(-12.3, -11.7), (13.1, -10.2), (12.4, 12.8), (-11.9, 11.1)]
-    exp = inside_polygon(s, poly)
-    got = B.inside_polygon_blocks(blk, poly)
-    assert _cells(got) == _cells(exp)
-    n = B.polygon_count_blocks(blk, poly).collect()[0]["n_inside"]
-    assert n == exp.count()
+    sparse, dense = _mk(spark, 5), _dense(spark)
+    for s, poly, rel in [
+        (sparse, [(-12.3, -11.7), (13.1, -10.2), (12.4, 12.8), (-11.9, 11.1)], (0.5, 0.5)),
+        # bbox edges exactly on block boundaries (bits=3: multiples of 8),
+        # with rel=(0,0) putting sample positions on those edges
+        (dense, [(-8.0, -8.0), (8.0, -8.0), (8.0, 8.0), (-8.0, 8.0)], (0.0, 0.0)),
+        # wholly in negative coordinates
+        (dense, [(-19.2, -18.9), (-3.1, -17.4), (-5.6, -2.2), (-17.7, -4.8)], (0.5, 0.5)),
+    ]:
+        blk = B.pack_blocks(s, bits=3)
+        exp = inside_polygon(s, poly, rel=rel)
+        got = B.inside_polygon_blocks(blk, poly, rel=rel)
+        assert _cells(got) == _cells(exp) and len(_cells(exp)) > 0, poly
+        n = B.polygon_count_blocks(blk, poly, rel=rel).collect()[0]["n_inside"]
+        assert n == exp.count(), poly
 
 
 @pytest.mark.parametrize("dom", [d.value for d in Dominance])
@@ -623,6 +643,17 @@ def test_near_line_blocks_parity(spark):
     got = B.near_line_blocks(B.pack_blocks(s, bits=3), 0.0, 0.0, 0.6, 0.8, 7.0,
                              layers=["height", "n"])
     assert _cells(got) == _cells(exp)
+    dense = _dense(spark)
+    for line, rel in [
+        # band edges y=0 and y=8 exactly on block boundaries (bits=3), with
+        # rel=(0,0) putting sample positions on both edges
+        ((0.0, 4.0, 1.0, 0.0, 4.0), (0.0, 0.0)),
+        # band wholly in negative coordinates
+        ((-10.0, -12.0, 1.0, 0.5, 2.5), (0.5, 0.5)),
+    ]:
+        exp = near_line(dense, *line, rel=rel)
+        got = B.near_line_blocks(B.pack_blocks(dense, bits=3), *line, rel=rel)
+        assert _cells(got) == _cells(exp) and len(_cells(exp)) > 0, line
     # diagonal line: the band must actually prune blocks (fewer scanned)
     pruned = B.near_line_blocks(B.pack_blocks(s, bits=2), 0.0, -1000.0, 1.0, 0.0, 1.0)
     assert pruned.count() == 0
@@ -667,7 +698,7 @@ def test_r6_advice_guards(spark):
     """r5 ADVICE robustness fixes: narrow int overflow raises (instead of
     silently wrapping), mixed narrow/wide merge sides raise (instead of
     silently downcasting), zero-length near-line direction raises at
-    plan-build time."""
+    plan-build time in both layouts."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
@@ -696,3 +727,8 @@ def test_r6_advice_guards(spark):
 
     with _pytest.raises(ValueError, match="zero-length direction"):
         near_line_blocks(wide, 0.0, 0.0, 0.0, 0.0, 1.0)
+    # the sample path shares the line predicate, hence the guard
+    from aardvark_geometry_quadtree_spark.operators.query import near_line
+
+    with _pytest.raises(ValueError, match="zero-length direction"):
+        near_line(s, 0.0, 0.0, 0.0, 0.0, 1.0)

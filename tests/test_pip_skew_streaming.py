@@ -14,16 +14,19 @@ def test_pip_join_matches_single_polygon_path(spark, q10x7):
             (1, [0.0, 5.0, 4.0, 4.0, 0.0], [0.0, 0.0, 4.0, 4.5, 4.0]),  # golden: 18
             (2, [3.9, 10.1, 10.1, 8.1, 8.1, 3.9], [-0.1, -0.1, 7.1, 7.1, 4.1, 4.1]),  # 30
             (3, [100.0, 101.0, 100.5], [100.0, 100.0, 101.0]),  # outside: 0
+            (4, [0.0, 0.0, 4.0, 4.0, 5.0], [0.0, 4.0, 4.5, 4.0, 0.0]),  # polygon 1, CW
         ],
         "poly_id int, xs array<double>, ys array<double>",
     )
     got = pip_join(q10x7, polys)
     counts = {r["poly_id"]: r["n"] for r in got.groupBy("poly_id").agg(F.count("*").alias("n")).collect()}
-    assert counts == {1: 18, 2: 30}
-    # row-level parity with the plan-time expression path for polygon 1
-    a = {(r["cx"], r["cy"]) for r in got.filter("poly_id = 1").collect()}
+    assert counts == {1: 18, 2: 30, 4: 18}
+    # row-level parity with the plan-time expression path for polygon 1, in
+    # both windings
     b = {(r["cx"], r["cy"]) for r in inside_polygon(q10x7, [(0, 0), (5, 0), (4, 4), (4.0, 4.5), (0, 4)]).collect()}
-    assert a == b
+    for pid in (1, 4):
+        a = {(r["cx"], r["cy"]) for r in got.filter(f"poly_id = {pid}").collect()}
+        assert a == b, pid
 
 
 def test_salted_agg_matches_plain(spark):
