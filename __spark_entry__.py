@@ -105,8 +105,9 @@ def _doc_blocks(
     per-cell means and packs the arrays in the same pass.
 
     Produces EXACTLY ``pack_blocks(_doc_samples(spark, sf_dir, source),
-    bits)`` (guard-tested with exceptAll in both directions): the per-cell
-    mean is sum/count over integer-valued doubles (n_chars), so the sums
+    bits)`` (guard-tested with exceptAll in both directions,
+    tests/test_blocks.py): the per-cell mean is sum/count over
+    integer-valued doubles (n_chars), so the sums
     are exact in float64 regardless of grouping order and the one-pass
     kernel's division equals the hash-aggregate's bitwise. The two-step
     form paid two Exchanges (cell-key aggregation, then block-key

@@ -7,8 +7,11 @@ spatial joins on a samples DataFrame ``(cx, cy, e, <layers...>)``:
   of the reference's ``isNodeFullyOutside`` subtree pruning (Query.fs:352-354),
   pushed down to parquet scans as min/max filters;
 - phase 2 (fine): per-sample predicate on the SampleMode position
-  (Query.fs:443-608) — still pure Column arithmetic for box/cell/line/convex
-  polygons; batched kernels only for arbitrary many-polygon joins.
+  (Query.fs:443-608) — Column arithmetic for box/cell/line; polygons are
+  tested in numpy (:func:`_winding_np`) inside Arrow-batched kernels: one
+  bbox + winding ``sample_inside`` (:func:`_polygon_predicates`) for
+  ``inside_polygon`` and the block-path polygon queries, and per polygon
+  for the many-polygon ``pip_join``.
 
 The reference resolves merge nodes lazily during traversal (Query.fs:79-338);
 this engine resolves merges eagerly at build time (operators/merge.py), so
@@ -22,11 +25,13 @@ Every sample's "position" is ``(c + rel) * 2^e`` per SampleMode
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions import cells as C
+from ..functions import cells_np as CN
 
 
 def query_all(samples: DataFrame, min_exponent: int | None = None) -> DataFrame:
@@ -58,8 +63,9 @@ def query_generic(
       position (Query.fs:443-608).
 
     All three receive Columns and must return boolean Columns (pure Catalyst:
-    the predicate stays in whole-stage codegen). Built-in queries
-    (inside_polygon, near_line) are thin wrappers over this surface.
+    the predicate stays in whole-stage codegen). ``near_line`` is a thin
+    wrapper over this surface; ``inside_polygon`` shares its ``node_outside``
+    prune and runs its fine test in an Arrow kernel instead.
 
     ``with_selection=True`` adds the reference Result's selection kind
     (Query.fs:417-431): a ``selection`` column valued 'full' for samples
@@ -71,8 +77,7 @@ def query_generic(
     if node_outside is not None or node_inside is not None:
         # only when used: every Column op is a Python->JVM round trip, and
         # the block path (blocks.py) passes sample_inside alone
-        x0, y0 = C.cell_min(F.col("cx"), F.col("e")), C.cell_min(F.col("cy"), F.col("e"))
-        x1, y1 = C.cell_max(F.col("cx"), F.col("e")), C.cell_max(F.col("cy"), F.col("e"))
+        x0, y0, x1, y1 = _cell_bounds()
     df = samples
     if node_outside is not None:
         df = df.filter(~node_outside(x0, y0, x1, y1))
@@ -87,6 +92,12 @@ def query_generic(
     elif with_selection:
         return df.filter(fine).withColumn("selection", F.lit("cells"))
     return df.filter(fine)
+
+
+def _cell_bounds():
+    """World bounds (x0, y0, x1, y1) of each sample's cell, as Columns."""
+    cx, cy, e = F.col("cx"), F.col("cy"), F.col("e")
+    return C.cell_min(cx, e), C.cell_min(cy, e), C.cell_max(cx, e), C.cell_max(cy, e)
 
 
 def lod_cut(
@@ -259,38 +270,12 @@ def intersects_cell(samples: DataFrame, qcx: int, qcy: int, qe: int) -> DataFram
 # J7 InsidePolygon (Query.fs:454-468, 595-624)
 # ---------------------------------------------------------------------------
 
-def _winding_expr(px, py, verts: list[tuple[float, float]]):
-    """Winding-number point-in-polygon as a plan-time Column expression.
-
-    The polygon is fixed at plan time, so the edge loop unrolls into pure
-    JVM-side arithmetic (whole-stage codegen) — no Python per row. Nonzero
-    winding rule, boundary points counted as inside (matches the reference's
-    Polygon2d.Contains on the golden fixtures).
-    """
-    n = len(verts)
-    wind = F.lit(0)
-    on_edge = F.lit(False)
-    for i in range(n):
-        x1, y1 = (float(v) for v in verts[i])
-        x2, y2 = (float(v) for v in verts[(i + 1) % n])
-        cross = (F.lit(x2 - x1)) * (py - F.lit(y1)) - (F.lit(y2 - y1)) * (px - F.lit(x1))
-        up = (F.lit(y1) <= py) & (py < F.lit(y2)) & (cross > 0)
-        down = (F.lit(y2) <= py) & (py < F.lit(y1)) & (cross < 0)
-        wind = wind + F.when(up, F.lit(1)).when(down, F.lit(-1)).otherwise(F.lit(0))
-        # boundary: point on segment
-        within_seg = (
-            (px >= F.lit(min(x1, x2))) & (px <= F.lit(max(x1, x2)))
-            & (py >= F.lit(min(y1, y2))) & (py <= F.lit(max(y1, y2)))
-        )
-        on_edge = on_edge | ((cross == 0) & within_seg)
-    return (wind != 0) | on_edge
-
-
 def _winding_np(px, py, verts: list[tuple[float, float]]):
-    """:func:`_winding_expr` over numpy position arrays (any matching shape)
-    for the Arrow-batch kernels: the same edge arithmetic in the same order,
-    the same nonzero rule, boundary points inside. Pinned point for point
-    against the Catalyst expression (tests/test_queries.py)."""
+    """Winding-number point-in-polygon over numpy position arrays (any
+    matching shape). Nonzero winding rule, boundary points counted as inside
+    (matches the reference's Polygon2d.Contains on the golden fixtures).
+    Pinned point for point against an unrolled Catalyst expression of the
+    same edge arithmetic (tests/conftest.py ``winding_expr``)."""
     n = len(verts)
     wind = np.zeros(np.shape(px), dtype=np.int64)
     on_edge = np.zeros(np.shape(px), dtype=bool)
@@ -314,15 +299,43 @@ def _polygon_bbox(verts: list[tuple[float, float]]) -> tuple[float, float, float
     return min(xs), min(ys), max(xs), max(ys)
 
 
+# Most cells one numpy pass of a polygon kernel tests: Spark's Arrow batches
+# are bounded in rows, not cells, and one row of a block table holds w*w
+# cells (a 10,000-block batch of 128x128 blocks is 164M cells)
+_CELLS_PER_PASS = 1 << 18
+
+
 def _polygon_predicates(verts: list[tuple[float, float]]):
-    """(node_outside, sample_inside) of a NORMALIZED polygon: bbox prune,
-    then bbox + exact winding on the position."""
-    box_outside, in_bbox = _box_predicates(*_polygon_bbox(verts))
+    """(node_outside, sample_inside) of a polygon, after vertex dedup and CCW
+    normalization (Query.fs:455-458): ``node_outside`` is the bbox prune as
+    Column builders; ``sample_inside(px, py)`` is bbox + exact winding over
+    numpy position arrays, the one per-sample polygon test of both layouts.
+    """
+    verts = _normalize_polygon(verts)
+    if not verts:
+        raise ValueError("inside_polygon: empty polygon")
+    bx0, by0, bx1, by1 = _polygon_bbox(verts)
+    box_outside, _ = _box_predicates(bx0, by0, bx1, by1)
 
     def sample_inside(px, py):
-        return in_bbox(px, py) & _winding_expr(px, py, verts)
+        inside = (px >= bx0) & (px <= bx1) & (py >= by0) & (py <= by1)
+        # winding only where the bbox holds: the same result, and a small
+        # polygon's bbox is a few percent of the cells its blocks hold
+        inside[inside] = _winding_np(px[inside], py[inside], verts)
+        return inside
 
     return box_outside, sample_inside
+
+
+def _keep_samples(batch: pa.RecordBatch, sample_inside, rel: tuple[float, float]):
+    """Row slices of a samples batch ``(cx, cy, e, ...)`` reduced to the rows
+    whose position passes ``sample_inside``; schema unchanged."""
+    for start in range(0, batch.num_rows, _CELLS_PER_PASS):
+        part = batch.slice(start, _CELLS_PER_PASS)
+        e = part.column("e").to_numpy()
+        px = CN.sample_pos(part.column("cx").to_numpy(), e, rel[0])
+        py = CN.sample_pos(part.column("cy").to_numpy(), e, rel[1])
+        yield part.filter(pa.array(sample_inside(px, py)))
 
 
 def inside_polygon(
@@ -332,14 +345,21 @@ def inside_polygon(
 ) -> DataFrame:
     """Samples whose SampleMode position lies inside the (CCW) polygon.
 
-    Two-phase via ``query_generic``: cell-bounds-vs-polygon-bbox prune
-    (Catalyst, prunable) then bbox + exact winding on the sample position
-    (also Catalyst — the polygon is a plan-time constant). Mirrors
+    Two-phase like ``query_generic``: cell-bounds-vs-polygon-bbox prune
+    (Catalyst, prunable), then bbox + exact winding on the sample position in
+    one Arrow-batched numpy pass. The vertices stay in Python: a new polygon
+    builds no per-vertex Column expression and compiles no new code. Mirrors
     Query.InsidePolygon (Query.fs:454-468) incl. vertex dedup + CCW
     normalization (Polygon2d.WithoutMultiplePoints / IsCcw).
     """
-    node_outside, sample_inside = _polygon_predicates(_normalize_polygon(verts))
-    return query_generic(samples, sample_inside, node_outside=node_outside, rel=rel)
+    node_outside, sample_inside = _polygon_predicates(verts)
+    pruned = samples.filter(~node_outside(*_cell_bounds()))
+
+    def _kernel(batches):
+        for batch in batches:
+            yield from _keep_samples(batch, sample_inside, rel)
+
+    return pruned.mapInArrow(_kernel, pruned.schema)
 
 
 def _normalize_polygon(verts: list[tuple[float, float]]) -> list[tuple[float, float]]:

@@ -16,3 +16,35 @@ def q10x7(spark):
     from aardvark_geometry_quadtree_spark.sources.grids import grid
 
     return grid(spark, 0, 0, 10, 7, e=0, pattern="xy").cache()
+
+
+def _winding_expr(px, py, verts):
+    """Winding-number point-in-polygon as a plan-time Column expression: the
+    edge loop unrolled into Catalyst arithmetic, the same edge arithmetic in
+    the same order as ``query._winding_np``. Nonzero winding rule, boundary
+    points counted as inside."""
+    from pyspark.sql import functions as F
+
+    n = len(verts)
+    wind = F.lit(0)
+    on_edge = F.lit(False)
+    for i in range(n):
+        x1, y1 = (float(v) for v in verts[i])
+        x2, y2 = (float(v) for v in verts[(i + 1) % n])
+        cross = (F.lit(x2 - x1)) * (py - F.lit(y1)) - (F.lit(y2 - y1)) * (px - F.lit(x1))
+        up = (F.lit(y1) <= py) & (py < F.lit(y2)) & (cross > 0)
+        down = (F.lit(y2) <= py) & (py < F.lit(y1)) & (cross < 0)
+        wind = wind + F.when(up, F.lit(1)).when(down, F.lit(-1)).otherwise(F.lit(0))
+        within_seg = (
+            (px >= F.lit(min(x1, x2))) & (px <= F.lit(max(x1, x2)))
+            & (py >= F.lit(min(y1, y2))) & (py <= F.lit(max(y1, y2)))
+        )
+        on_edge = on_edge | ((cross == 0) & within_seg)
+    return (wind != 0) | on_edge
+
+
+@pytest.fixture(scope="session")
+def winding_expr():
+    """The Catalyst reference of the numpy polygon test: ``winding_expr(px,
+    py, verts) -> Column`` (the package's one polygon test runs in numpy)."""
+    return _winding_expr

@@ -2,10 +2,13 @@
 pyramid differential tests against the sample-level operators, polygon
 query parity, and the Exchange-free bucketed merge plan."""
 
+import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from aardvark_geometry_quadtree_spark.operators import blocks as B
+from aardvark_geometry_quadtree_spark.operators import query as Q
 from aardvark_geometry_quadtree_spark.operators.merge import Dominance, merge_samples
 from aardvark_geometry_quadtree_spark.operators.pyramid import build_pyramid
 from aardvark_geometry_quadtree_spark.operators.query import inside_polygon
@@ -732,3 +735,136 @@ def test_r6_advice_guards(spark):
 
     with _pytest.raises(ValueError, match="zero-length direction"):
         near_line(s, 0.0, 0.0, 0.0, 0.0, 1.0)
+
+
+# the parity polygons above, a CW concave polygon and one with repeated
+# vertices whose corners sit on sample positions (rel=0.5)
+_KERNEL_CASES = [
+    ("sparse", [(-12.3, -11.7), (13.1, -10.2), (12.4, 12.8), (-11.9, 11.1)], (0.5, 0.5)),
+    ("dense", [(-8.0, -8.0), (8.0, -8.0), (8.0, 8.0), (-8.0, 8.0)], (0.0, 0.0)),
+    ("dense", [(-19.2, -18.9), (-3.1, -17.4), (-5.6, -2.2), (-17.7, -4.8)], (0.5, 0.5)),
+    ("dense", [(-15.0, -15.0), (-15.0, 14.5), (0.3, 2.2), (14.0, 14.0), (13.7, -15.2)], (0.5, 0.5)),
+    ("dense", [(-9.5, -3.5), (-9.5, -3.5), (6.5, -12.5), (11.5, 5.5), (11.5, 5.5),
+               (-2.5, 16.5), (-9.5, -3.5)], (0.5, 0.5)),
+]
+
+
+def test_polygon_kernel_matches_catalyst_reference(spark, winding_expr):
+    """Both layouts' numpy polygon kernel == the simple form: query_generic
+    with bbox & the unrolled Catalyst winding expression, row for row with
+    layer values; polygon_count_blocks == its row count."""
+    frames = {"sparse": _mk(spark, 5), "dense": _dense(spark)}
+    for name, poly, rel in _KERNEL_CASES:
+        s = frames[name]
+        verts = Q._normalize_polygon(poly)
+        node_outside, in_bbox = Q._box_predicates(*Q._polygon_bbox(verts))
+        ref = Q.query_generic(
+            s, lambda px, py: in_bbox(px, py) & winding_expr(px, py, verts),
+            node_outside=node_outside, rel=rel,
+        )
+        exp = _cells(ref)
+        assert len(exp) == ref.count() > 0, poly
+        blk = B.pack_blocks(s, bits=3)
+        for got in (Q.inside_polygon(s, poly, rel=rel), B.inside_polygon_blocks(blk, poly, rel=rel)):
+            assert got.count() == len(exp) and _cells(got) == exp, poly
+        n = B.polygon_count_blocks(blk, poly, rel=rel).collect()[0]["n_inside"]
+        assert n == len(exp), poly
+
+
+def _block_batch(rows, seed=0):
+    """Arrow block batch (bx, by, e, w, occ, height) from (bx, by, e, w)
+    rows, with a seeded random occupancy and per-cell heights."""
+    rng = np.random.default_rng(seed)
+    occ = [rng.random(w * w) < 0.6 for _, _, _, w in rows]
+    return pa.RecordBatch.from_arrays([
+        pa.array([r[0] for r in rows], pa.int64()),
+        pa.array([r[1] for r in rows], pa.int64()),
+        pa.array([r[2] for r in rows], pa.int32()),
+        pa.array([r[3] for r in rows], pa.int32()),
+        pa.array([o.tolist() for o in occ], pa.list_(pa.bool_())),
+        pa.array([rng.random(len(o)).tolist() for o in occ], pa.list_(pa.float64())),
+    ], names=["bx", "by", "e", "w", "occ", "height"])
+
+
+def _select_reference(batch, sample_inside, rel):
+    """Per-block form of ``_select_cells``: {(bx, by, e): (occ, height)}."""
+    out = {}
+    for r in batch.to_pylist():
+        w, e = r["w"], r["e"]
+        i = np.arange(w * w)
+        px = (r["bx"] * w + i % w + rel[0]) * 2.0 ** e
+        py = (r["by"] * w + i // w + rel[1]) * 2.0 ** e
+        occ = np.array(r["occ"]) & sample_inside(px, py)
+        if occ.any():
+            out[(r["bx"], r["by"], e)] = (occ.tolist(), r["height"])
+    return out
+
+
+def _select_all(batch, sample_inside, rel):
+    parts = list(B._select_cells(batch, sample_inside, rel))
+    for p in parts:
+        assert p.schema == batch.schema
+        cells = sum(len(o) for o in p.column("occ").to_pylist())
+        assert p.num_rows <= 1 or cells <= Q._CELLS_PER_PASS
+    return {
+        (r["bx"], r["by"], r["e"]): (r["occ"], r["height"])
+        for p in parts for r in p.to_pylist()
+    }
+
+
+@pytest.mark.parametrize("case", ["sliced", "empty", "mixed_w", "over_bound"])
+def test_select_cells_batches(case):
+    """The block polygon kernel on the batch shapes Spark can hand it:
+    a slice (non-zero list offsets), an empty batch, blocks of different
+    widths in one batch, and more cells than one numpy pass may hold (many
+    blocks, and one block larger than the bound)."""
+    rel = (0.5, 0.5)
+    if case in ("sliced", "empty", "mixed_w"):
+        _, inside = Q._polygon_predicates([(-3.0, -5.0), (9.0, -2.0), (6.5, 11.0), (-4.0, 7.0)])
+        batch = _block_batch([(-1, -1, 0, 8), (0, -1, 0, 8), (-1, 0, 0, 4), (0, 0, 1, 4),
+                              (1, 0, 0, 2), (1, 1, -1, 8)])
+        if case == "sliced":
+            batch = batch.slice(2, 3)
+        elif case == "empty":
+            batch = batch.slice(3, 0)
+    else:
+        _, inside = Q._polygon_predicates([(10.0, 10.0), (600.0, 40.0), (300.0, 500.0)])
+        batch = _block_batch([(bx, by, 0, 128) for bx in range(4) for by in range(5)]
+                             + [(0, 0, 0, 1024)])
+        assert sum(len(o) for o in batch.column("occ").to_pylist()) > Q._CELLS_PER_PASS
+    exp = _select_reference(batch, inside, rel)
+    assert _select_all(batch, inside, rel) == exp
+    assert (len(exp) == 0) == (case == "empty")
+
+
+def test_empty_polygon_raises_named_error(spark):
+    s = _mk(spark, 5)
+    blk = B.pack_blocks(s, bits=3)
+    for call in (lambda: Q.inside_polygon(s, []), lambda: B.inside_polygon_blocks(blk, []),
+                 lambda: B.polygon_count_blocks(blk, [])):
+        with pytest.raises(ValueError, match="inside_polygon: empty polygon"):
+            call()
+
+
+@pytest.mark.parametrize("with_counts", [True, False])
+def test_doc_blocks_equals_pack_of_doc_samples(spark, tmp_path, with_counts):
+    """The driver's one-shuffle ``_doc_blocks`` == ``pack_blocks`` of the
+    per-cell-mean ``_doc_samples``: ``exceptAll`` is empty both ways, on a
+    synthetic documents table with several docs per cell."""
+    import __spark_entry__ as E
+
+    docs = spark.range(3000).select(
+        (F.col("id") * 7 % 2500).alias("doc_id"),
+        (F.col("id") * 37 % 4001 + 1).cast("int").alias("n_chars"),
+        F.concat(F.lit("src"), (F.col("id") % 3).cast("string")).alias("source"),
+    )
+    docs.write.parquet(str(tmp_path / "documents.parquet"))
+    for source in (None, "src1"):
+        smp = E._doc_samples(spark, str(tmp_path), source)
+        if not with_counts:
+            smp = smp.drop("n_docs")
+        exp = B.pack_blocks(smp, bits=4)
+        got = E._doc_blocks(spark, str(tmp_path), source, bits=4, with_counts=with_counts)
+        got = got.select(*exp.columns)
+        assert exp.count() > 0
+        assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0

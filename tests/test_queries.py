@@ -133,9 +133,9 @@ def test_inside_polygon_duplicated_vertices(q10x7):
     [(0.0, 0.0), (4.0, 0.0), (4.0, 0.0), (4.0, 3.0), (2.0, 5.0), (0.0, 3.0)],  # repeated vertex
     [(-0.5, -0.5), (5.5, 1.0), (1.0, 5.5)],  # slanted edges through grid points
 ])
-def test_winding_numpy_matches_catalyst(spark, verts):
-    """The Catalyst winding expression (sample and block queries) and its
-    numpy twin (pip_join, polygon_count_blocks) agree point for point, on a
+def test_winding_numpy_matches_catalyst(spark, winding_expr, verts):
+    """The Catalyst winding expression (the reference, tests/conftest.py) and
+    the package's numpy winding test agree point for point, on a
     quarter-unit grid that hits vertices, edge interiors and horizontal
     edges. Both take the vertex list as given (no normalization)."""
     import numpy as np
@@ -146,7 +146,7 @@ def test_winding_numpy_matches_catalyst(spark, verts):
         [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(gx.ravel(), gy.ravel()))],
         "i long, px double, py double",
     )
-    rows = pts.select("i", Q._winding_expr(F.col("px"), F.col("py"), verts).alias("w")).collect()
+    rows = pts.select("i", winding_expr(F.col("px"), F.col("py"), verts).alias("w")).collect()
     catalyst = np.zeros(gx.size, dtype=bool)
     for r in rows:
         catalyst[r["i"]] = r["w"]
