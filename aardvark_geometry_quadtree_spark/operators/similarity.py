@@ -1,11 +1,12 @@
 """Similarity search over embedding columns (array<float>).
 
-Baseline: brute-force cosine top-k as one codegen'd pass (zip_with +
-aggregate — no Python, no UDF). Scale path: sign-LSH bucketing with
-deterministic md5-derived hyperplanes (plan-time literal arrays, so the
-same planes are reproducible in the DuckDB oracle and across runs), probing
-only the query's bucket ring. Embedding near-dup pairs reuse the buckets as
-candidate generation.
+Baseline: brute-force cosine top-k. Scale path: sign-LSH bucketing with
+deterministic md5-derived hyperplanes (:func:`hyperplanes`: the same planes
+in any engine and run, so the DuckDB oracle rebuilds them), probing only the
+query's bucket ring. Embedding near-dup pairs use banded sign-LSH keys as
+candidate generation. Every sign-LSH key, the query dot products and the
+self-norms come from one ``mapInArrow`` numpy kernel (:func:`_scored_arrow`);
+cosine verification and rounding stay in Catalyst.
 """
 
 from __future__ import annotations
@@ -37,75 +38,87 @@ def cosine(a: Column, b: Column, decimals: int = 6) -> Column:
 
 def _scored_arrow(
     embeddings: DataFrame,
-    query_vec: list[float],
-    planes: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    keep: list[str],
+    vec_col: str,
+    planes: list[list[float]] = (),
+    keys: list[str] = (),
+    query_vec: list[float] | None = None,
 ) -> DataFrame:
-    """One ``mapInArrow`` scoring pass: per vector the query dot product,
-    the squared self-norm, and (when ``planes`` is non-empty) the sign-LSH
-    bucket — all in a numpy kernel over the flat Arrow list buffer.
+    """One ``mapInArrow`` scoring pass over the flat Arrow list buffer.
+
+    Emits the ``keep`` columns unchanged (types from the input schema), then
+    one sign-LSH key column per name in ``keys`` — the planes split evenly
+    over the keys, bit j of key b = (vec . planes[b * rows + j]) >= 0 with
+    rows = len(planes) // len(keys) — and, when ``query_vec`` is given,
+    ``dotq`` (vec . query) and ``normsq`` (vec . vec).
 
     Why not Catalyst: the HOF ``aggregate(zip_with(...))`` dot product is
-    interpreted per ELEMENT (boxed doubles on the JVM heap), and the
-    codegen'd ``element_at``-chain alternative measured 2-3x WORSE (the
-    64-term expression trees per plane blow past codegen limits). The
-    kernel does the same arithmetic in C at a fraction of the cost
-    (measured 1.08s -> 0.46s for the 6-plane ANN scan at bench sf1.0).
+    interpreted per ELEMENT (boxed doubles on the JVM heap), and each plane
+    is its own expression tree: 64 band-key planes took seconds of query
+    planning before the first job started. The kernel does the same
+    arithmetic in C (the 6-plane ANN scan measured 1.08s -> 0.46s at bench
+    sf1.0).
 
     FP-exactness contract: accumulation loops SEQUENTIALLY over dimensions
-    (``acc += v[:, i] * q[i]``), reproducing the HOF's left-to-right
-    summation order bit-for-bit — NOT a numpy ``dot``/``sum``, whose
-    pairwise/SIMD summation would differ in the last bit and flip rounded
-    values on ties. Division/rounding stay in Catalyst (callers), so
-    rounding semantics are Spark's. Differential-tested: full-scan buckets
-    and rounded sims identical to the HOF formulation.
+    (``acc += v[:, i] * p[i]``, one elementwise multiply and add per plane),
+    reproducing the HOF's left-to-right summation order bit-for-bit — NOT a
+    numpy ``dot``/``sum``, whose pairwise/SIMD summation would differ in the
+    last bit and flip signs on ties or rounded values. Division/rounding
+    stay in Catalyst (callers), so rounding semantics are Spark's.
+    Differential-tested against the Catalyst plane expressions
+    (tests/conftest.py): band keys, ANN buckets and rounded sims identical.
 
-    Contract: fixed-dimension, null-free vectors (dim = len(query_vec)) —
-    the embedding-table format this module defines.
+    Contract: fixed-dimension, null-free vectors (dim = len(query_vec), or
+    the plane width) — the embedding-table format this module defines; a
+    batch that breaks it raises ``ValueError``.
     """
     import numpy as np
     import pyarrow as pa
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    P = np.array(planes, dtype=np.float64) if planes else None
-    qn = np.array(query_vec, dtype=np.float64)
-    dim = len(query_vec)
-    n_planes = len(planes)
-    out_schema = f"{id_col} long, bucket long, dotq double, normsq double"
+    qn = None if query_vec is None else np.array(query_vec, dtype=np.float64)
+    dim = len(query_vec) if query_vec is not None else len(planes[0])
+    P = np.array(planes, dtype=np.float64).reshape(len(planes), dim)
+    rows = len(planes) // max(len(keys), 1)
+    weights = np.int64(1) << np.arange(rows, dtype=np.int64)
+    out_schema = StructType(
+        [StructField(c, embeddings.schema[c].dataType) for c in keep]
+        + [StructField(k, LongType()) for k in keys]
+        + ([] if qn is None else [StructField("dotq", DoubleType()), StructField("normsq", DoubleType())])
+    )
+    out_names = out_schema.fieldNames()
 
     def _score(batches):
         for b in batches:
-            t = pa.Table.from_batches([b])
-            if t.num_rows == 0:
+            n = b.num_rows
+            if n == 0:
                 continue
-            ids = t[id_col].to_numpy()
-            lst = t.column(vec_col)
-            arr = lst.combine_chunks() if isinstance(lst, pa.ChunkedArray) else lst
-            flat = arr.flatten().to_numpy().astype(np.float64, copy=False)
-            V = flat.reshape(len(ids), dim)
-            n = len(ids)
+            vecs = b.column(vec_col)
+            if not (vecs.value_lengths().to_numpy(zero_copy_only=False) == dim).all():
+                raise ValueError(f"_scored_arrow: every {vec_col} must hold {dim} values")
+            V = vecs.flatten().to_numpy().astype(np.float64, copy=False).reshape(n, dim)
+            D = np.zeros((n, len(P)))
             dq = np.zeros(n)
             ns = np.zeros(n)
-            dps = [np.zeros(n) for _ in range(n_planes)]
             for i in range(dim):  # sequential over dims: exact HOF FP order
                 vi = V[:, i]
-                dq += vi * qn[i]
-                ns += vi * vi
-                for p in range(n_planes):
-                    dps[p] += vi * P[p, i]
-            bucket = np.zeros(n, dtype=np.int64)
-            for p in range(n_planes):
-                bucket |= (dps[p] >= 0).astype(np.int64) << p
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), pa.array(bucket), pa.array(dq), pa.array(ns)],
-                names=[id_col, "bucket", "dotq", "normsq"],
-            )
+                D += vi[:, None] * P[:, i]
+                if qn is not None:
+                    dq += vi * qn[i]
+                    ns += vi * vi
+            bits = (D[:, : rows * len(keys)] >= 0).reshape(n, len(keys), rows)
+            kv = (bits * weights).sum(axis=2)
+            cols = [b.column(c) for c in keep] + [pa.array(kv[:, j]) for j in range(len(keys))]
+            if qn is not None:
+                cols += [pa.array(dq), pa.array(ns)]
+            yield pa.RecordBatch.from_arrays(cols, names=out_names)
 
     # small single-row-group embedding tables scan as ONE non-empty task;
     # spread before the kernel (see dedup._spread)
     from .dedup import _spread
 
-    return _spread(embeddings.select(id_col, vec_col)).mapInArrow(_score, out_schema)
+    cols = list(dict.fromkeys([*keep, vec_col]))
+    return _spread(embeddings.select(*cols)).mapInArrow(_score, out_schema)
 
 
 def brute_force_topk(
@@ -120,7 +133,7 @@ def brute_force_topk(
     ORDER BY + LIMIT (TakeOrderedAndProject — no full sort shuffle).
     Deterministic tie-break on id."""
     q = F.array(*[F.lit(float(v)) for v in query_vec])
-    sc = _scored_arrow(embeddings, query_vec, [], id_col, vec_col)
+    sc = _scored_arrow(embeddings, [id_col], vec_col, query_vec=query_vec)
     sim = F.round(F.col("dotq") / (F.sqrt(F.col("normsq")) * norm(q)), 6)
     return (
         sc.select(F.col(id_col), sim.alias("sim"))
@@ -131,7 +144,7 @@ def brute_force_topk(
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     """Deterministic ±1 hyperplanes from md5(seed, plane, dim-index) — no RNG
-    state, identical in any engine/run (the plan embeds them as literals)."""
+    state, identical in any engine/run (the DuckDB oracle rebuilds them)."""
     planes = []
     for p in range(n_planes):
         row = []
@@ -140,15 +153,6 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
             row.append(1.0 if int(h[:4], 16) % 2 == 0 else -1.0)
         planes.append(row)
     return planes
-
-
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-LSH bucket id: bit p = (vec . plane_p) >= 0."""
-    out = F.lit(0).cast("long")
-    for p, plane in enumerate(planes):
-        pl = F.array(*[F.lit(v) for v in plane])
-        out = out + F.when(dot(vec, pl) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return out
 
 
 def ann_topk(
@@ -176,7 +180,7 @@ def ann_topk(
     q = F.array(*[F.lit(float(v)) for v in query_vec])
     # bucket + query-dot + self-norm in ONE Arrow kernel scan (same values
     # as the HOF formulation bit-for-bit — see _scored_arrow)
-    sc = _scored_arrow(embeddings, query_vec, planes, id_col, vec_col)
+    sc = _scored_arrow(embeddings, [id_col], vec_col, planes, ["bucket"], query_vec)
     sim = F.round(F.col("dotq") / (F.sqrt(F.col("normsq")) * norm(q)), 6)
     return (
         sc.filter(F.col("bucket").isin(probe))
@@ -214,7 +218,7 @@ def write_bucketed(
     if dim is None:
         dim = embeddings.select(F.size(vec_col)).first()[0]
     planes = hyperplanes(dim, n_planes, seed)
-    b = embeddings.withColumn("bucket", lsh_bucket(F.col(vec_col), planes))
+    b = _scored_arrow(embeddings, embeddings.columns, vec_col, planes, ["bucket"])
     # one directory per bucket; within a bucket, files stay row-grouped for
     # the scan. repartition by bucket so each partition writes one directory.
     b.repartition("bucket").write.mode("overwrite").partitionBy("bucket").parquet(path)
@@ -251,20 +255,6 @@ def ann_topk_bucketed(
     )
 
 
-def band_keys(vec: Column, planes: list[list[float]], bands: int) -> list[Column]:
-    """Split the sign signature over ``planes`` into ``bands`` integer band
-    keys (len(planes)/bands bits each)."""
-    rows = len(planes) // bands
-    keys = []
-    for b in range(bands):
-        out = F.lit(0).cast("long")
-        for j in range(rows):
-            pl = F.array(*[F.lit(v) for v in planes[b * rows + j]])
-            out = out + F.when(dot(vec, pl) >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-        keys.append(out)
-    return keys
-
-
 def embedding_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
@@ -286,17 +276,19 @@ def embedding_dup_pairs(
     recover the recall the wider key costs. Small exploratory corpora may
     prefer narrower keys (e.g. n_planes=6, bands=2) for recall at tiny n,
     as the sf0.01 driver query does explicitly.
+
+    All band keys come from ONE :func:`_scored_arrow` pass (a ``MapInArrow``
+    in the plan, whatever the plane count), exploded to (band, key) rows for
+    the self-join; only the candidate pairs' cosine runs in Catalyst.
     """
     dim = embeddings.select(F.size(vec_col)).first()[0]
     planes = hyperplanes(dim, bands * n_planes, seed)
-    keys = band_keys(F.col(vec_col), planes, bands)
-    b = embeddings.select(
+    keys = [f"key_{i}" for i in range(bands)]
+    b = _scored_arrow(embeddings, [id_col, vec_col], vec_col, planes, keys).select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
-        F.explode(
-            F.array(*[F.struct(F.lit(i).alias("band"), k.alias("key")) for i, k in enumerate(keys)])
-        ).alias("bk"),
-    ).select("id", "v", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+        F.posexplode(F.array(*keys)).alias("band", "key"),
+    )
     a = b.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"), "band", "key")
     c = b.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"), "band", "key")
     return (

@@ -48,3 +48,38 @@ def winding_expr():
     """The Catalyst reference of the numpy polygon test: ``winding_expr(px,
     py, verts) -> Column`` (the package's one polygon test runs in numpy)."""
     return _winding_expr
+
+
+def _band_keys(vec, planes, bands):
+    """Sign-LSH band keys as plan-time Column expressions: the signature over
+    ``planes`` split into ``bands`` integer keys of len(planes)/bands bits,
+    bit j of key b = (vec . planes[b * rows + j]) >= 0, each dot product an
+    ``aggregate(zip_with(...))`` over a literal plane array."""
+    from pyspark.sql import functions as F
+
+    from aardvark_geometry_quadtree_spark.operators.similarity import dot
+
+    rows = len(planes) // bands
+    keys = []
+    for b in range(bands):
+        out = F.lit(0).cast("long")
+        for j in range(rows):
+            pl = F.array(*[F.lit(v) for v in planes[b * rows + j]])
+            out = out + F.when(dot(vec, pl) >= 0, F.lit(1 << j)).otherwise(F.lit(0))
+        keys.append(out)
+    return keys
+
+
+@pytest.fixture(scope="session")
+def band_keys():
+    """The Catalyst reference of the kernel's band keys: ``band_keys(vec,
+    planes, bands) -> list[Column]`` (the package computes every sign-LSH
+    key in ``similarity._scored_arrow``)."""
+    return _band_keys
+
+
+@pytest.fixture(scope="session")
+def lsh_bucket():
+    """The Catalyst reference of the ANN bucket: ``lsh_bucket(vec, planes) ->
+    Column``, bit p = (vec . planes[p]) >= 0 (one band over all planes)."""
+    return lambda vec, planes: _band_keys(vec, planes, 1)[0]

@@ -70,8 +70,30 @@ def test_minhash_table_and_lsh(docs):
         assert 0.5 < jac[(0, 2)] < 1.0
 
 
+def _simhash16(text):
+    """16-bit SimHash over whitespace tokens as one Column expression.
+
+    Each token hashes to 16 bits (md5 prefix); bit b of the fingerprint is
+    the sign of the sum over tokens of (2*bit_b - 1).
+    """
+    toks = F.split(F.trim(text), r"\s+")
+    h = lambda t: F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("long")  # noqa: E731
+
+    def _mk_merge(b: int):
+        # factory closure, not a default-arg lambda (acc, t, b=b): Spark
+        # reads the lambda's arity, so the extra arg would make it a 3-arg
+        # HOF lambda and silently rebind b to a Column
+        return lambda acc, t: acc + (F.shiftright(h(t), b) % 2) * 2 - 1
+
+    out = F.lit(0).cast("long")
+    for b in range(16):
+        bit_sum = F.aggregate(toks, F.lit(0).cast("long"), _mk_merge(b))
+        out = out + F.when(bit_sum >= 0, F.lit(1 << b)).otherwise(F.lit(0))
+    return out
+
+
 def test_simhash_near_for_near_dups(docs):
-    sh = {r["doc_id"]: r["s"] for r in docs.select("doc_id", D.simhash16(F.col("text")).alias("s")).collect()}
+    sh = {r["doc_id"]: r["s"] for r in docs.select("doc_id", _simhash16(F.col("text")).alias("s")).collect()}
     ham = bin(sh[0] ^ sh[2]).count("1")
     ham_far = bin(sh[0] ^ sh[4]).count("1")
     assert ham <= ham_far
@@ -101,6 +123,105 @@ def test_ann_matches_brute_force_top1(spark):
     ann = S.ann_topk(emb, q, k=1, n_planes=4).collect()[0]
     assert ann["vec_id"] == bf["vec_id"]
     assert ann["sim"] == bf["sim"] == 1.0
+
+
+def test_topk_keeps_int_id_dtype(spark):
+    """The scoring kernel takes the id type from the input schema: ``int``
+    ids come back as ``int`` with the same top-k as ``bigint`` ids."""
+    rows = [(i, [float((i * 7 + j * 3) % 11 - 5) for j in range(8)]) for i in range(100)]
+    q = [float((3 * 7 + j * 3) % 11 - 5) for j in range(8)]  # = vec 3's values
+    got = {}
+    for id_type, dtype in (("int", "int"), ("long", "bigint")):
+        emb = spark.createDataFrame(rows, f"vec_id {id_type}, embedding array<float>")
+        for op, df in (("bf", S.brute_force_topk(emb, q, k=3)),
+                       ("ann", S.ann_topk(emb, q, k=3, n_planes=4))):
+            assert dict(df.dtypes)["vec_id"] == dtype
+            got[id_type, op] = [tuple(r) for r in df.collect()]
+    assert got["int", "bf"] == got["long", "bf"] and got["int", "ann"] == got["long", "ann"]
+    assert got["int", "bf"][0] == got["int", "ann"][0] == (3, 1.0)
+
+
+def _vectors(spark, n, dim):
+    """``n`` seeded pseudo-random array<float> vectors of width ``dim``."""
+    return spark.range(n).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[
+            (F.pmod(F.xxhash64(F.col("id"), F.lit(d)), F.lit(2000)) / 1000.0 - 1.0)
+            for d in range(dim)
+        ]).cast("array<float>").alias("embedding"),
+    )
+
+
+def _edge_vectors(spark, planes):
+    """Vectors on the ``>= 0`` boundary: the zero vector; a vector whose dot
+    product with plane 0 is exactly 0 (two opposite-signed dims); and one
+    whose dot product with plane 0 is 0 only in the sequential left-to-right
+    order (2^54 - 1 rounds back to 2^54, then - 2^54 gives 0; summing the
+    two 2^54 terms first gives -1, as a BLAS ``V @ P.T`` does)."""
+    dim = len(planes[0])
+    p0 = planes[0]
+    d1 = 0
+    d2 = next(d for d in range(1, dim) if p0[d] == -p0[d1])
+    tie = [0.0] * dim
+    tie[d1] = tie[d2] = 0.5
+    order = [0.0] * dim
+    order[0], order[1], order[2] = 2.0**54 * p0[0], -1.0 * p0[1], -(2.0**54) * p0[2]
+    for v in (tie, order):
+        acc = 0.0
+        for x, y in zip(v, p0):
+            acc += x * y
+        assert acc == 0.0
+    rows = [(-1, [0.0] * dim), (-2, tie), (-3, order)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+@pytest.mark.parametrize("dim,bands,rows", [(32, 4, 16), (64, 2, 6)])
+def test_band_keys_kernel_matches_catalyst(spark, band_keys, dim, bands, rows):
+    """Differential guard of the one sign-LSH kernel: its band keys equal the
+    Catalyst ``aggregate(zip_with(...))`` plane expressions bit for bit, at
+    the corpus-scale 4 x 16 setting and `q_embed_dups`' 2 x 6, including the
+    zero vector and exact-zero dot products (the ``>= 0`` tie)."""
+    planes = S.hyperplanes(dim, bands * rows)
+    emb = _vectors(spark, 200, dim).unionByName(_edge_vectors(spark, planes))
+    names = [f"k{b}" for b in range(bands)]
+    got = S._scored_arrow(emb, ["vec_id"], "embedding", planes, names)
+    ref = emb.select(
+        "vec_id",
+        *[k.alias(nm) for k, nm in zip(band_keys(F.col("embedding"), planes, bands), names)],
+    )
+    assert got.dtypes == ref.dtypes
+    assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
+    assert got.count() == 203
+    edge = {r["vec_id"]: r for r in got.filter("vec_id < 0").collect()}
+    assert all(edge[-1][nm] == (1 << rows) - 1 for nm in names)  # 0 >= 0 on every plane
+    assert edge[-2]["k0"] & 1 and edge[-3]["k0"] & 1  # the plane-0 ties
+
+
+def test_scored_arrow_rejects_ragged_vectors(spark):
+    """A vector of the wrong width or a null vector fails the kernel with its
+    named error instead of a reshape error or a silently shifted row."""
+    planes = S.hyperplanes(3, 4)
+    for rows in ([(0, [1.0, 2.0, 3.0]), (1, [1.0, 2.0]), (2, [1.0, 2.0, 3.0, 4.0])],
+                 [(0, [1.0, 2.0, 3.0]), (1, None)]):
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        with pytest.raises(Exception, match="every embedding must hold 3 values"):
+            S._scored_arrow(emb, ["vec_id"], "embedding", planes, ["bucket"]).collect()
+
+
+def test_write_bucketed_buckets_match_catalyst(spark, lsh_bucket, tmp_path):
+    """The bucket index's ``bucket`` directory key is the Catalyst sign-LSH
+    bucket of every vector, and every row round-trips unchanged."""
+    from aardvark_geometry_quadtree_spark.operators.similarity import write_bucketed
+
+    planes = S.hyperplanes(16, 5)
+    emb = _vectors(spark, 200, 16).unionByName(_edge_vectors(spark, planes))
+    path = str(tmp_path / "annidx")
+    write_bucketed(emb, path, n_planes=5)
+    back = spark.read.parquet(path).select(
+        "vec_id", "embedding", F.col("bucket").cast("long").alias("bucket"))
+    ref = emb.select("vec_id", "embedding", lsh_bucket(F.col("embedding"), planes).alias("bucket"))
+    assert back.exceptAll(ref).count() == 0 and ref.exceptAll(back).count() == 0
+    assert back.count() == 203
 
 
 def test_embedding_dup_pairs(spark):
@@ -144,7 +265,7 @@ def test_embedding_band_candidate_volume_subquadratic(spark):
 
     from pyspark.sql import functions as F
 
-    from aardvark_geometry_quadtree_spark.operators.similarity import band_keys, hyperplanes
+    from aardvark_geometry_quadtree_spark.operators.similarity import _scored_arrow, hyperplanes
 
     n, dim, bands, planes_per = 300, 32, 4, 16
     emb = spark.range(n).select(
@@ -155,11 +276,11 @@ def test_embedding_band_candidate_volume_subquadratic(spark):
         ]).alias("embedding"),
     )
     planes = hyperplanes(dim, bands * planes_per)
-    keys = band_keys(F.col("embedding"), planes, bands)
-    ex = emb.select(
-        F.explode(F.array(*[F.struct(F.lit(i).alias("band"), k.alias("key"))
-                            for i, k in enumerate(keys)])).alias("bk")
-    ).select("bk.band", "bk.key")
+    # the keys embedding_dup_pairs joins on: the shipped kernel's
+    keys = [f"k{b}" for b in range(bands)]
+    ex = _scored_arrow(emb, [], "embedding", planes, keys).select(
+        F.posexplode(F.array(*keys)).alias("band", "key")
+    )
     buckets = ex.groupBy("band", "key").count().filter("count > 1")
     cand = buckets.selectExpr("sum(count * (count - 1) / 2) as c").collect()[0]["c"] or 0
     assert cand < 0.02 * (n * (n - 1) / 2) * bands, cand
@@ -327,7 +448,39 @@ def test_simhash_kernel_equivalence(spark, docs):
     edge = spark.createDataFrame(
         [(0, None), (1, ""), (2, " "), (3, "\tx y"), (4, "a")], "doc_id long, text string"
     )
-    for df in (docs, edge):
+    # two documents each longer than one bit-sum pass (so their batches are
+    # too), next to short ones
+    n_long = D._TOKENS_PER_PASS + 1000
+    long_docs = spark.createDataFrame(
+        [(i, " ".join(f"w{(t * 7919 + i) % 5000}" for t in range(n_long))) for i in range(2)]
+        + [(10 + i, f"w{i} w{i + 1} short doc") for i in range(6)],
+        "doc_id long, text string",
+    )
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    all_null = spark.createDataFrame([(0, None), (1, None)], "doc_id long, text string")
+    for df in (docs, edge, long_docs, empty, all_null):
         ref, got = ref_simhash(df), D.simhash64_table(df)
         assert ref.exceptAll(got).count() == 0 and got.exceptAll(ref).count() == 0
         assert ref.count() == got.count()
+    assert D.simhash64_table(long_docs).count() == 8
+    assert D.simhash64_table(empty).count() == D.simhash64_table(all_null).count() == 0
+
+
+def test_bit_sums_passes(monkeypatch):
+    """The SimHash bit-sum passes against a one-shot integer sum: documents
+    cut by pass boundaries, longer than a pass, and one token long."""
+    import numpy as np
+
+    rng = np.random.default_rng(8)
+    for per_pass in (1, 2, 3, 7, 64):
+        monkeypatch.setattr(D, "_TOKENS_PER_PASS", per_pass)
+        for _ in range(20):
+            nd, V = int(rng.integers(1, 30)), int(rng.integers(1, 20))
+            ntok = rng.integers(1, 25, size=nd)
+            idx = rng.integers(0, V, size=int(ntok.sum()))
+            B = rng.integers(0, 2, size=(V, 64)).astype(np.uint8)
+            starts = np.concatenate([[0], np.cumsum(ntok)[:-1]])
+            ref = np.zeros((nd, 64), dtype=np.int64)
+            np.add.at(ref, np.repeat(np.arange(nd), ntok), B[idx].astype(np.int64))
+            got = D._bit_sums(B, idx, starts)
+            assert got.dtype == np.int32 and (got == ref).all()

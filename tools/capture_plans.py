@@ -16,7 +16,7 @@ BENCH_SET = [
     "merge_blocks", "pyramid_blocks", "polygon_blocks", "merge_mixed_res",
     "merge_blocks_mixed", "knn_batch", "lod_cut", "exact_dups", "lsh_pairs",
     "jaccard_pairs", "simhash", "cosine_topk", "ann_topk",
-    "multimodal_features", "minhash",
+    "multimodal_features", "minhash", "embed_dups",
 ]
 
 
