@@ -401,12 +401,15 @@ def _explode_cells(
     vector_specs: dict[str, VectorSpec],
     layer_types: dict[str, str] | None,
     carry: list[str],
+    outer: bool = False,
 ) -> DataFrame:
     """Shared cell-unpack plan: JVM ``posexplode`` over zipped scalar
     arrays, vector layers re-cut from their flat cell-major buffers with
     ``slice`` at the exploded position (per-cell hole test: the intcolor
     mask element, or channel 0's NaN for float kinds — the pack-format
     contract). ``carry`` columns (e.g. probe context) ride through.
+    ``outer=True`` keeps a row whose block columns are null (an unmatched
+    side of an outer join) as one row of null cell columns.
     Used by :func:`unpack_blocks` and the kNN round unpack — one
     implementation, so vector layers read correctly on BOTH paths."""
     zipped = [F.col("occ")]
@@ -422,10 +425,12 @@ def _explode_cells(
             vcarry.append(n)
             if spec.kind == "intcolor":
                 vcarry.append(f"{n}_mask")
+    explode = F.posexplode_outer if outer else F.posexplode
     df = blocks.select(
         *carry, "bx", "by", "e", "w", *vcarry,
-        F.posexplode(F.arrays_zip(*zipped)).alias("pos", "z"),
-    ).filter(F.col("z.occ"))
+        explode(F.arrays_zip(*zipped)).alias("pos", "z"),
+    )
+    df = df.filter(F.col("z.occ") | F.col("pos").isNull() if outer else F.col("z.occ"))
     cols = [
         *(F.col(c) for c in carry),
         (F.col("bx") * F.col("w") + F.pmod(F.col("pos"), F.col("w"))).cast("long").alias("cx"),
@@ -1587,23 +1592,21 @@ def knn_join_blocks(
 ) -> DataFrame:
     """Batched kNN over a BLOCK staging table — ``query.knn_join``
     semantics (k nearest by cell-center distance per probe, tie-break
-    (dist, cx, cy)) without a standing per-sample table: each ring round
-    equi-joins probe ring cells to whole BLOCKS and unpacks only the
-    matched block rows (JVM posexplode of the round's candidates), so the
-    steady-state block staging feeds the probe path with a pruned scan
-    instead of a full ``unpack_blocks`` of the table.
+    (dist, cx, cy)) without a standing per-sample table: the same ring loop
+    (``query._knn_rounds``) with whole BLOCKS as the ring-keyed candidates,
+    unpacking only the matched block rows (JVM posexplode of the round's
+    candidates), so the steady-state block staging feeds the probe path
+    with a pruned scan instead of a full ``unpack_blocks`` of the table.
 
     Correctness inherits :func:`~.query.knn_join`'s inscribed-circle
     guarantee: ``ring_exponent`` is clamped to at least ``max(e) + bits``
     so every block lies entirely inside ONE ring cell (block world extent
     divides the ring cell), making "all blocks in the probe's ring" a
-    superset of "all sample centers within radius r*side". Stragglers
-    escalate to geometrically coarser rings exactly like the sample path;
-    the covering round (ring ⊇ the block-extent bbox) is an exact global
-    top-k.
+    superset of "all sample centers within radius r*side". The covering
+    round's data bbox is the block-extent bbox. Every block holds at least
+    one occupied cell (the pack format), so a ring cell that matches a
+    block yields at least one candidate row.
     """
-    from pyspark.sql import Window as W
-
     layers, _ = _block_layers(blocks)
     vector_specs = resolve_vector_specs(layers)
     int_l = {
@@ -1613,128 +1616,46 @@ def knn_join_blocks(
     if stage_input:
         # each ring round re-joins the block table: cut once (callers with
         # an already-staged table pass stage_input=False)
-        from .. import boundary as _bnd0
-        blocks = _bnd0.cut(blocks)
+        from .. import boundary as _bnd
+        blocks = _bnd.cut(blocks)
     e_max = blocks.agg(F.max("e")).collect()[0][0]
-    if e_max is None:
-        # empty table: k-nearest of nothing is nothing
-        empty = unpack_blocks(blocks, layers, layer_types)
-        return positions.select("pid", "px", "py").limit(0).join(
-            empty.withColumn("dist", F.lit(0.0)), how="cross"
-        )
-    min_re = int(e_max) + bits
+    # an empty table skips the base rounds: its first round covers it
+    min_re = (0 if e_max is None else int(e_max)) + bits
     ring_exponent = min_re if ring_exponent is None else max(int(ring_exponent), min_re)
-    side = 2.0 ** ring_exponent
+    bside = F.pow(F.lit(2.0), F.col("e").cast("double")) * F.col("w").cast("double")
+    bx0 = F.col("bx").cast("double") * bside
+    by0 = F.col("by").cast("double") * bside
 
-    cx_center = (F.col("cx").cast("double") + 0.5) * F.pow(F.lit(2.0), F.col("e").cast("double"))
-    cy_center = (F.col("cy").cast("double") + 0.5) * F.pow(F.lit(2.0), F.col("e").cast("double"))
-    dist = F.sqrt(
-        (cx_center - F.col("px")) * (cx_center - F.col("px"))
-        + (cy_center - F.col("py")) * (cy_center - F.col("py"))
-    )
-    w_ord = W.partitionBy("pid").orderBy(F.col("dist").asc(), F.col("cx"), F.col("cy"))
-    sample_cols = ["cx", "cy", "e", *layers]
-    out_cols = ["pid", "px", "py", *sample_cols, "dist"]
-
-    # block -> containing ring cell via the block's world min corner
-    def _keyed_blocks(cur_side: float) -> DataFrame:
-        bside = F.pow(F.lit(2.0), F.col("e").cast("double")) * F.col("w").cast("double")
-        return blocks.withColumn(
-            "_rcx", F.floor(F.col("bx").cast("double") * bside / F.lit(cur_side)).cast("long")
-        ).withColumn(
-            "_rcy", F.floor(F.col("by").cast("double") * bside / F.lit(cur_side)).cast("long")
+    def candidates(ring: DataFrame, cur_side: float) -> DataFrame:
+        # block -> containing ring cell via the block's world min corner
+        kb = blocks.select(
+            "*",
+            F.floor(bx0 / F.lit(cur_side)).cast("long").alias("_rcx"),
+            F.floor(by0 / F.lit(cur_side)).cast("long").alias("_rcy"),
         )
-
-    def _round(unresolved, cur_side: float, r: int, covering: bool):
-        u = unresolved.select(
-            "pid", "px", "py",
-            F.floor(F.col("px") / F.lit(cur_side)).cast("long").alias("_pcx"),
-            F.floor(F.col("py") / F.lit(cur_side)).cast("long").alias("_pcy"),
-        )
-        ring = u.select(
-            "*", F.explode(F.sequence(F.lit(-r), F.lit(r))).alias("_dx")
-        ).select("*", F.explode(F.sequence(F.lit(-r), F.lit(r))).alias("_dy"))
-        kb = _keyed_blocks(cur_side)
         matched = ring.join(
             kb,
-            (kb["_rcx"] == ring["_pcx"] + ring["_dx"])
-            & (kb["_rcy"] == ring["_pcy"] + ring["_dy"]),
-            "inner",
-        ).drop("_pcx", "_pcy", "_dx", "_dy", "_rcx", "_rcy")
-        # unpack ONLY the matched blocks: JVM posexplode over this round's
-        # candidates (probe context carried through) — the shared
-        # _explode_cells plan, so vector layers read correctly here too
-        cand = _explode_cells(
-            matched, layers, int_l, vector_specs, layer_types,
-            carry=["pid", "px", "py"],
-        ).withColumn("dist", dist)
-        topk = (
-            cand.withColumn("_rn", F.row_number().over(w_ord))
-            .filter(F.col("_rn") <= k)
-            .withColumn("_kth", F.max("dist").over(W.partitionBy("pid")))
-            .withColumn("_nc", F.count("*").over(W.partitionBy("pid")))
+            (kb["_rcx"] == ring["_pcx"] + ring["_dx"]) & (kb["_rcy"] == ring["_pcy"] + ring["_dy"]),
+            "left",
         )
-        # plan cut between rounds (same contract as query.knn_join)
-        from .. import boundary as _bnd
-        topk = _bnd.cut(topk)
-        if covering:
-            return topk
-        return topk.filter(
-            (F.col("_nc") >= k) & (F.col("_kth") <= F.lit(float(r) * cur_side))
+        # unpack ONLY the matched blocks: the shared _explode_cells plan,
+        # so vector layers read correctly here too
+        return _explode_cells(
+            matched, layers, int_l, vector_specs, layer_types,
+            carry=["pid", "px", "py"], outer=True,
         )
 
-    unresolved = positions.select("pid", "px", "py")
-    resolved_parts = []
-    r = max(1, int(start_radius))
-    r_last = 0  # largest base radius actually certified (0 = none ran)
-    while r <= max_rings:
-        done = _round(unresolved, side, r, covering=False)
-        resolved_parts.append(done.select(*out_cols))
-        unresolved = unresolved.join(done.select("pid").distinct(), "pid", "left_anti")
-        r_last = r
-        if unresolved.limit(1).count() == 0:
-            unresolved = None
-            break
-        r *= 2
-    if unresolved is not None:
-        bside = F.pow(F.lit(2.0), F.col("e").cast("double")) * F.col("w").cast("double")
-        bbox = blocks.agg(
-            F.min(F.col("bx").cast("double") * bside).alias("x0"),
-            F.max((F.col("bx").cast("double") + 1) * bside).alias("x1"),
-            F.min(F.col("by").cast("double") * bside).alias("y0"),
-            F.max((F.col("by").cast("double") + 1) * bside).alias("y1"),
+    def data_bbox():
+        b = blocks.agg(
+            F.min(bx0).alias("x0"), F.min(by0).alias("y0"),
+            F.max(bx0 + bside).alias("x1"), F.max(by0 + bside).alias("y1"),
         ).collect()[0]
-        needed = unresolved.agg(
-            F.max(
-                F.greatest(
-                    F.abs(F.col("px") - F.lit(float(bbox["x0"]))),
-                    F.abs(F.col("px") - F.lit(float(bbox["x1"]))),
-                    F.abs(F.col("py") - F.lit(float(bbox["y0"]))),
-                    F.abs(F.col("py") - F.lit(float(bbox["y1"]))),
-                )
-            )
-        ).collect()[0][0]
-        # the base loop certified no resolution within r_last * side, so any
-        # escalated round with r2*side2 <= that radius is a provable no-op
-        # (each one a join + count job): start at the first geometrically
-        # coarser ring that actually extends the certified radius
-        r2, side2 = 2, side * 2.0
-        while r2 * side2 <= float(r_last) * side:
-            side2 *= 2.0
-        while True:
-            covering = (r2 * side2) >= float(needed)
-            done = _round(unresolved, side2, r2, covering=covering)
-            resolved_parts.append(done.select(*out_cols))
-            if covering:
-                break
-            unresolved = unresolved.join(done.select("pid").distinct(), "pid", "left_anti")
-            if unresolved.limit(1).count() == 0:
-                break
-            side2 *= 2.0
-    out = resolved_parts[0]
-    for p in resolved_parts[1:]:
-        out = out.unionByName(p)
-    return out
+        return None if b["x0"] is None else tuple(b)
+
+    return Q._knn_rounds(
+        positions, k, 2.0 ** ring_exponent, candidates, data_bbox, ["cx", "cy", "e", *layers],
+        max_rings if e_max is not None else 0, start_radius,
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -24,12 +24,15 @@ Every sample's "position" is ``(c + rel) * 2^e`` per SampleMode
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from .. import boundary as _bnd
 from ..functions import cells as C
 from ..functions import cells_np as CN
 
@@ -109,39 +112,39 @@ def lod_cut(
     would drop below ``Config.MinExponent`` (Query.fs:372-380), returning the
     coarsest nodes at-or-above the cut along each branch — equivalently: keep
     a sample iff no *finer* sample with e >= min_exponent covers the same area.
-    Implemented as an ancestor anti-join over the (few) distinct exponent pairs.
+    Implemented as ONE anti-join: every sample emits its ancestor key
+    ``(ea, cx >> (ea - e), cy >> (ea - e))`` at each coarser exponent ``ea``
+    of the set (one explode over the exponent list), and a sample is dropped
+    iff its own key is among them. The keys are not made distinct: an
+    anti-join's result does not depend on duplicates on its right side, and
+    a ``distinct`` would cost a shuffle stage of its own.
     ``exponents``: caller-known exponent set — skips the discovery scan.
     """
     s = samples.filter(F.col("e") >= F.lit(min_exponent))
     if exponents is not None:
         exps = sorted(e for e in set(exponents) if e >= min_exponent)
     else:
-        exps = [r[0] for r in s.select("e").distinct().collect()]
+        exps = sorted(r[0] for r in s.select("e").distinct().collect())
     if len(exps) <= 1:
         return s
-    # a sample at exponent ea is shadowed if any sample at finer eb (< ea)
-    # has it as ancestor -> anti-join on the computed ancestor key
-    out = None
-    fine_keys = None
-    for ea in sorted(exps):
-        level = s.filter(F.col("e") == ea)
-        finer = [eb for eb in exps if eb < ea]
-        if finer:
-            shadows = (
-                s.filter(F.col("e").isin(finer))
-                .select(
-                    C.parent_coord(F.col("cx"), (F.lit(ea) - F.col("e")).cast("int")).alias("acx"),
-                    C.parent_coord(F.col("cy"), (F.lit(ea) - F.col("e")).cast("int")).alias("acy"),
-                )
-                .distinct()
-            )
-            level = level.join(
-                shadows,
-                (level["cx"] == shadows["acx"]) & (level["cy"] == shadows["acy"]),
-                "left_anti",
-            )
-        out = level if out is None else out.unionByName(level)
-    return out
+    levels = s.filter(F.col("e").isin(exps))
+    shadows = (
+        s.filter(F.col("e").isin(exps[:-1]))
+        .select("cx", "cy", "e", F.explode(F.array(*(F.lit(int(x)) for x in exps[1:]))).alias("_ea"))
+        .filter(F.col("_ea") > F.col("e"))
+        .select(
+            "_ea",
+            F.expr("shiftright(cx, CAST(_ea - e AS INT))").alias("_acx"),
+            F.expr("shiftright(cy, CAST(_ea - e AS INT))").alias("_acy"),
+        )
+    )
+    return levels.join(
+        shadows,
+        (levels["e"] == shadows["_ea"])
+        & (levels["cx"] == shadows["_acx"])
+        & (levels["cy"] == shadows["_acy"]),
+        "left_anti",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -453,12 +456,20 @@ def near_line(
     """Samples whose position is within ``dist`` of the infinite line through
     (ox,oy) with direction (dx,dy) (Ray2d.GetDistanceToRay, Query.fs:477-488).
 
-    Coarse phase (via ``query_generic``): a cell is fully outside when all
-    four corners sit on one side of the band — codegen'd corner distance
-    checks; the fine phase cross-product distance on the position is exact.
+    One exact cross-product distance test on the position per row. The
+    band's ``node_outside`` (all four cell corners on one side) is left to
+    the block path's block prune: per sample row it is implied by the fine
+    test whenever ``rel`` lies in [0, 1]. There the position lies in the
+    closed cell [x0, x1] x [y0, y1] (``(c + rel) * 2^e`` rounds monotonically
+    in ``rel``, and rel 0 and 1 give exactly the corner values), and the
+    signed distance as evaluated — ``ux * (py - oy) - uy * (px - ox)`` in
+    doubles — is monotone in each coordinate, because every floating-point
+    operation rounds monotonically; so on the cell it lies between its
+    smallest and largest corner value, and a cell with every corner beyond
+    ``dist`` on one side has its position beyond it too.
     """
-    node_outside, sample_inside = _line_predicates(ox, oy, dx, dy, dist)
-    return query_generic(samples, sample_inside, node_outside=node_outside, rel=rel)
+    _, sample_inside = _line_predicates(ox, oy, dx, dy, dist)
+    return query_generic(samples, sample_inside, rel=rel)
 
 
 def _line_predicates(ox: float, oy: float, dx: float, dy: float, dist: float):
@@ -603,148 +614,156 @@ def knn_join(
     quadrant (Query.fs:645-793); distributed, that inverts into ring-keyed
     equi-joins: every sample is keyed by the ring cell CONTAINING ITS
     CENTER at ``ring_exponent`` (center-keying is exact for center
-    distance), probes explode to their Chebyshev-radius-r ring of cells,
-    and one equi-join + per-probe top-k window scores the round. Probes
-    whose k-th distance fits inside the searched radius (``dist_k <=
-    r * side`` — the same inscribed-circle guarantee as :func:`knn`) are
-    done; the rest re-enter with doubled radius. The driver loop is over
-    RADII (<= log2(max_rings) rounds, one count per round) — never over
-    probes. Stragglers past ``max_rings`` (probes in empty regions)
-    escalate to geometrically COARSER ring cells at a fixed small cell
-    radius — every escalated round is still a ring-keyed equi-join (never
-    a cross join), and the loop provably terminates at the first round
-    whose ring square covers the whole data bounding box for every
-    remaining probe: that covering round IS the exact global top-k for the
-    stragglers (it also handles a table with fewer than k samples). A
-    probe set concentrated in empty space therefore costs
-    O(log(distance)) pruned joins, not a cartesian scan per probe.
+    distance), and :func:`_knn_rounds` joins each probe's ring of cells to
+    those keys. Stragglers past ``max_rings`` escalate to coarser rings;
+    a probe set concentrated in empty space costs O(log(distance)) pruned
+    joins, never a cartesian scan per probe.
 
     Returns (pid, px, py, cx, cy, e, <layers...>, dist), exactly k rows per
     probe (fewer iff the whole table has < k samples); tie-break
     (dist, cx, cy) matches :func:`knn` — parity-tested per probe.
     """
-    from .. import boundary as _bnd
-
     if ring_exponent is None:
         ring_exponent = samples.agg(F.max("e")).collect()[0][0]
-    side = 2.0 ** ring_exponent
-
     # the samples frame is consumed once per ring round (plus the bbox agg):
     # cut it once so each round joins a materialized/staged frame instead of
     # recomputing the upstream lineage per round. Callers passing an
     # already-staged table can set stage_input=False to skip the copy.
     if stage_input:
         samples = _bnd.cut(samples)
-
     cx_center = C.sample_pos(F.col("cx"), F.col("e"), 0.5)
     cy_center = C.sample_pos(F.col("cy"), F.col("e"), 0.5)
 
-    dist = F.sqrt(
-        (cx_center - F.col("px")) * (cx_center - F.col("px"))
-        + (cy_center - F.col("py")) * (cy_center - F.col("py"))
-    )
-    w = W.partitionBy("pid").orderBy(F.col("dist").asc(), F.col("cx"), F.col("cy"))
-    out_cols = ["pid", "px", "py", *[c for c in samples.columns], "dist"]
+    def candidates(ring: DataFrame, cur_side: float) -> DataFrame:
+        s = samples.select(
+            "*",
+            F.floor(cx_center / F.lit(cur_side)).cast("long").alias("_rcx"),
+            F.floor(cy_center / F.lit(cur_side)).cast("long").alias("_rcy"),
+        )
+        return ring.join(
+            s,
+            (s["_rcx"] == ring["_pcx"] + ring["_dx"]) & (s["_rcy"] == ring["_pcy"] + ring["_dy"]),
+            "left",
+        )
 
-    def _round(unresolved, cur_side: float, r: int, covering: bool):
-        """One ring-keyed equi-join round at cell size ``cur_side``, cell
-        radius ``r``. The probe's ring covers the Chebyshev ball of radius
-        ``r * cur_side`` around it, so ``dist_k <= r * cur_side`` certifies
-        the top-k; ``covering=True`` means the ring contains the whole data
-        bbox and every remaining probe resolves unconditionally."""
-        s = samples.withColumn(
-            "_rcx", F.floor(cx_center / F.lit(cur_side)).cast("long")
-        ).withColumn("_rcy", F.floor(cy_center / F.lit(cur_side)).cast("long"))
-        u = unresolved.select(
+    def data_bbox():
+        b = samples.agg(
+            F.min(cx_center).alias("x0"), F.min(cy_center).alias("y0"),
+            F.max(cx_center).alias("x1"), F.max(cy_center).alias("y1"),
+        ).collect()[0]
+        return None if b["x0"] is None else tuple(b)
+
+    return _knn_rounds(
+        positions, k, 2.0 ** ring_exponent, candidates, data_bbox, samples.columns,
+        max_rings, start_radius,
+    )
+
+
+def _knn_rounds(
+    positions: DataFrame,
+    k: int,
+    side: float,
+    candidates,
+    data_bbox,
+    sample_cols: list[str],
+    max_rings: int,
+    start_radius: int,
+) -> DataFrame:
+    """The ring loop of both kNN layouts (:func:`knn_join`,
+    ``blocks.knn_join_blocks``); the layouts differ only in ``candidates``.
+
+    - ``candidates(ring, cur_side) -> DataFrame``: the probe ring rows
+      (pid, px, py, _pcx, _pcy, _dx, _dy: ring cell ``(_pcx + _dx, _pcy +
+      _dy)`` at cell size ``cur_side``) LEFT-joined to the samples whose
+      center lies in that ring cell, with columns (pid, px, py,
+      *sample_cols) among its own; a ring cell without samples keeps one
+      row of nulls, so every probe keeps at least one row.
+    - ``data_bbox() -> (x0, y0, x1, y1) | None``: a box holding every
+      sample (None for an empty table), read only when stragglers remain.
+
+    Each round scores the ring once: a per-probe window (dist, cx, cy),
+    nulls last, keeps the top k. The probe's ring covers the Chebyshev
+    ball of radius ``r * cur_side`` around it, so k non-null rows among
+    them with ``dist_k <= r * cur_side`` certify its top-k (the
+    inscribed-circle guarantee of :func:`knn`). The round is cut once; its
+    certified rows are output and its uncertified probes (``_rn == 1``)
+    are the next round's probes, both read from the cut, so the caller's
+    probe frame is scanned by the first round only.
+
+    Base rounds double the cell radius from ``start_radius`` up to
+    ``max_rings`` (the result is radius-schedule independent, only the
+    round count changes). Stragglers then escalate to geometrically
+    COARSER ring cells at cell radius 2 — world radius doubles per round,
+    every round still a ring-keyed equi-join — until the covering round,
+    whose ring contains the whole data bbox for every remaining probe: its
+    candidates are all samples, an exact global top-k (also correct when
+    the table holds fewer than k samples, or none).
+    """
+    qx = C.sample_pos(F.col("cx"), F.col("e"), 0.5)
+    qy = C.sample_pos(F.col("cy"), F.col("e"), 0.5)
+    dist = F.sqrt(
+        (qx - F.col("px")) * (qx - F.col("px")) + (qy - F.col("py")) * (qy - F.col("py"))
+    )
+    w = W.partitionBy("pid").orderBy(dist.asc_nulls_last(), F.col("cx"), F.col("cy"))
+    per_pid = W.partitionBy("pid")
+    out_cols = ["pid", "px", "py", *sample_cols, "dist"]
+    parts: list[DataFrame] = []
+
+    def _round(probes: DataFrame, cur_side: float, r: int, covering: bool) -> DataFrame:
+        """One ring round at cell size ``cur_side``, cell radius ``r``;
+        appends its certified rows to ``parts`` and returns the probes it
+        left uncertified."""
+        # hash-partitioned by pid BEFORE the join, so the per-probe window
+        # needs no shuffle of the candidate rows, and the probe scan runs
+        # next to the candidates' broadcast instead of after it
+        ring = probes.repartition("pid").select(
             "pid", "px", "py",
             F.floor(F.col("px") / F.lit(cur_side)).cast("long").alias("_pcx"),
             F.floor(F.col("py") / F.lit(cur_side)).cast("long").alias("_pcy"),
         )
-        ring = u.select(
-            "*", F.explode(F.sequence(F.lit(-r), F.lit(r))).alias("_dx")
-        ).select("*", F.explode(F.sequence(F.lit(-r), F.lit(r))).alias("_dy"))
-        cand = ring.join(
-            s,
-            (s["_rcx"] == ring["_pcx"] + ring["_dx"])
-            & (s["_rcy"] == ring["_pcy"] + ring["_dy"]),
-            "inner",
-        ).withColumn("dist", dist)
-        topk = (
-            cand.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .withColumn("_kth", F.max("dist").over(W.partitionBy("pid")))
-            .withColumn("_nc", F.count("*").over(W.partitionBy("pid")))
+        for d in ("_dx", "_dy"):
+            ring = ring.select("*", F.explode(F.sequence(F.lit(-r), F.lit(r))).alias(d))
+        top = candidates(ring, cur_side).select(
+            *out_cols[:-1], dist.alias("dist"), F.row_number().over(w).alias("_rn")
+        ).filter(F.col("_rn") <= k)
+        ok = F.lit(True) if covering else (
+            (F.count("dist").over(per_pid) >= k)
+            & (F.max("dist").over(per_pid) <= F.lit(float(r) * cur_side))
         )
-        # plan cut: each round's result feeds BOTH the output accumulation
-        # and the next round's anti-join (see boundary.py for the contract)
-        topk = _bnd.cut(topk)
-        if covering:
-            return topk
-        return topk.filter(
-            (F.col("_nc") >= k) & (F.col("_kth") <= F.lit(float(r) * cur_side))
-        )
+        # plan cut: the round's output and the next round's probes both
+        # read it (see boundary.py for the contract)
+        top = _bnd.cut(top.select(*out_cols, "_rn", ok.alias("_ok")))
+        parts.append(top.filter(F.col("_ok") & F.col("dist").isNotNull()).select(*out_cols))
+        return top.filter((F.col("_rn") == 1) & ~F.col("_ok"))
 
-    unresolved = positions.select("pid", "px", "py")
-    resolved_parts: list[DataFrame] = []
-    # start_radius skips the small early rounds when the caller knows the
-    # local density is low (each round costs a join + a count job; the
-    # result is radius-schedule independent, only round count changes)
+    probes = positions
     r = max(1, int(start_radius))
     r_last = 0  # largest base radius actually certified (0 = none ran)
     while r <= max_rings:
-        done = _round(unresolved, side, r, covering=False)
-        resolved_parts.append(done.select(*out_cols))
-        unresolved = unresolved.join(done.select("pid").distinct(), "pid", "left_anti")
+        probes = _round(probes, side, r, covering=False)
         r_last = r
-        if unresolved.limit(1).count() == 0:
-            unresolved = None
-            break
+        if probes.isEmpty():
+            return reduce(DataFrame.unionByName, parts)
         r *= 2
-    if unresolved is not None:
-        # straggler escalation: coarser cells, fixed small cell radius —
-        # world radius doubles per round at O(25) ring cells per probe.
-        # Terminates at the covering round: ring ⊇ data bbox for every
-        # remaining probe ⇒ the round's candidates are ALL samples' cells,
-        # i.e. an exact global top-k (also correct when the table holds
-        # fewer than k samples).
-        bbox = samples.agg(
-            F.min(cx_center).alias("x0"), F.max(cx_center).alias("x1"),
-            F.min(cy_center).alias("y0"), F.max(cy_center).alias("y1"),
-        ).collect()[0]
-        if bbox["x0"] is None:
-            out = resolved_parts[0]
-            for p in resolved_parts[1:]:
-                out = out.unionByName(p)
-            return out  # empty table: base rounds already produced nothing
+    bbox = data_bbox()
+    needed = 0.0  # an empty table: the first escalated round covers it
+    if bbox is not None:
         # farthest remaining probe's Chebyshev distance to the bbox
-        needed = unresolved.agg(
-            F.max(
-                F.greatest(
-                    F.abs(F.col("px") - F.lit(float(bbox["x0"]))),
-                    F.abs(F.col("px") - F.lit(float(bbox["x1"]))),
-                    F.abs(F.col("py") - F.lit(float(bbox["y0"]))),
-                    F.abs(F.col("py") - F.lit(float(bbox["y1"]))),
-                )
-            )
-        ).collect()[0][0]
-        # the base loop certified no resolution within r_last * side, so
-        # escalated rounds with r2*side2 <= that radius are provable no-ops
-        # (each a join + count job): start at the first coarser ring that
-        # extends the certified radius
-        r2, side2 = 2, side * 2.0
-        while r2 * side2 <= float(r_last) * side:
-            side2 *= 2.0
-        while True:
-            covering = (r2 * side2) >= float(needed)
-            done = _round(unresolved, side2, r2, covering=covering)
-            resolved_parts.append(done.select(*out_cols))
-            if covering:
-                break
-            unresolved = unresolved.join(done.select("pid").distinct(), "pid", "left_anti")
-            if unresolved.limit(1).count() == 0:
-                break
-            side2 *= 2.0
-    out = resolved_parts[0]
-    for p in resolved_parts[1:]:
-        out = out.unionByName(p)
-    return out
+        x0, y0, x1, y1 = (F.lit(float(v)) for v in bbox)
+        needed = float(probes.agg(F.max(F.greatest(
+            F.abs(F.col("px") - x0), F.abs(F.col("px") - x1),
+            F.abs(F.col("py") - y0), F.abs(F.col("py") - y1),
+        ))).collect()[0][0] or 0.0)
+    # the base loop certified no resolution within r_last * side, so
+    # escalated rounds with r2*side2 <= that radius are provable no-ops
+    # (each a join + an emptiness check): start at the first coarser ring
+    # that extends the certified radius
+    r2, side2 = 2, side * 2.0
+    while r2 * side2 <= float(r_last) * side:
+        side2 *= 2.0
+    while True:
+        covering = r2 * side2 >= needed
+        probes = _round(probes, side2, r2, covering=covering)
+        if covering or probes.isEmpty():
+            return reduce(DataFrame.unionByName, parts)
+        side2 *= 2.0

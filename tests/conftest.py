@@ -83,3 +83,71 @@ def lsh_bucket():
     """The Catalyst reference of the ANN bucket: ``lsh_bucket(vec, planes) ->
     Column``, bit p = (vec . planes[p]) >= 0 (one band over all planes)."""
     return lambda vec, planes: _band_keys(vec, planes, 1)[0]
+
+
+def _lod_cut_levels(samples, min_exponent, exponents=None):
+    """``query.lod_cut`` in its per-level form: one anti-join per coarser
+    exponent ``ea`` against the distinct ancestors, at ``ea``, of every
+    finer sample (ancestors from ``cells.parent_coord``), then the union of
+    the levels."""
+    from pyspark.sql import functions as F
+
+    from aardvark_geometry_quadtree_spark.functions import cells as C
+
+    s = samples.filter(F.col("e") >= F.lit(min_exponent))
+    if exponents is not None:
+        exps = sorted(e for e in set(exponents) if e >= min_exponent)
+    else:
+        exps = [r[0] for r in s.select("e").distinct().collect()]
+    if len(exps) <= 1:
+        return s
+    out = None
+    for ea in sorted(exps):
+        level = s.filter(F.col("e") == ea)
+        finer = [eb for eb in exps if eb < ea]
+        if finer:
+            shadows = (
+                s.filter(F.col("e").isin(finer))
+                .select(
+                    C.parent_coord(F.col("cx"), (F.lit(ea) - F.col("e")).cast("int")).alias("acx"),
+                    C.parent_coord(F.col("cy"), (F.lit(ea) - F.col("e")).cast("int")).alias("acy"),
+                )
+                .distinct()
+            )
+            level = level.join(
+                shadows,
+                (level["cx"] == shadows["acx"]) & (level["cy"] == shadows["acy"]),
+                "left_anti",
+            )
+        out = level if out is None else out.unionByName(level)
+    return out
+
+
+@pytest.fixture(scope="session")
+def lod_cut_levels():
+    """The per-level reference of ``query.lod_cut`` (the package decides
+    shadowing in one anti-join): ``lod_cut_levels(samples, min_exponent,
+    exponents=None) -> DataFrame``."""
+    return _lod_cut_levels
+
+
+@pytest.fixture
+def cuts():
+    """Every ``boundary.cut`` made while the test runs, as (executed plan
+    string of the cut's input, the cut frame); the cuts are still the
+    default ``localCheckpoint``."""
+    from aardvark_geometry_quadtree_spark import boundary
+
+    made = []
+
+    def record(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        out = boundary.local_boundary(df)
+        made.append((plan, out))
+        return out
+
+    boundary.set_default_boundary(record)
+    try:
+        yield made
+    finally:
+        boundary.set_default_boundary(None)

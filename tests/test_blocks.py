@@ -332,6 +332,65 @@ def test_knn_join_blocks_parity(spark):
     assert key(got) == key(exp)
 
 
+def _holed(spark):
+    """Every e=0 cell of [0, 32)^2 but the hole [4, 28)^2, plus the lone
+    cell (17, 17) inside it; height = cx + cy / 100."""
+    cx, cy = F.col("cx"), F.col("cy")
+    return spark.range(1024).select(
+        (F.col("id") % 32).alias("cx"),
+        (F.col("id") / 32).cast("long").alias("cy"),
+        F.lit(0).cast("int").alias("e"),
+    ).filter(
+        ~(cx.between(4, 27) & cy.between(4, 27)) | ((cx == 17) & (cy == 17))
+    ).withColumn("height", cx + cy / 100.0)
+
+
+@pytest.mark.parametrize("layout", ["samples", "blocks"])
+def test_knn_rounds_mixed_probes(spark, cuts, layout):
+    """One kNN call whose probes resolve in different rounds, on both
+    layouts (ring cells of side 2, k = 3): (0) in the hole, so its first
+    rings hold no candidate, only null rows; (1) next to the lone cell, so
+    its first ring holds one candidate at distance 0.7 and two null rows
+    fill its top 3, which must not certify it; (2) far outside, escalated
+    to the covering round; (3) on a cell corner with four candidates at
+    one distance, cut to k = 3 by (dist, cx, cy); (4) resolved by the first
+    ring. Every probe gets exactly the k rows of the per-point ``knn``, no
+    row is null, no probe is certified by two rounds, and no round
+    anti-joins."""
+    s = _holed(spark)
+    probes = [(0, 8.0, 8.0), (1, 17.0, 17.0), (2, 500.0, -300.0), (3, 2.0, 2.0), (4, 1.3, 2.7)]
+    pos = spark.createDataFrame(probes, "pid long, px double, py double")
+    if layout == "samples":
+        got = Q.knn_join(s, pos, k=3, ring_exponent=1, max_rings=4, stage_input=False)
+    else:
+        got = B.knn_join_blocks(B.pack_blocks(s, bits=1), pos, k=3, bits=1,
+                                ring_exponent=1, max_rings=4, stage_input=False)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
+    rows = got.collect()
+    assert all(r["cx"] is not None and r["dist"] is not None for r in rows)
+    out = {}
+    for r in rows:
+        out.setdefault(r["pid"], []).append((round(r["dist"], 9), r["cx"], r["cy"]))
+    for pid, px, py in probes:
+        exp = [(round(r["dist"], 9), r["cx"], r["cy"])
+               for r in Q.knn(s, px, py, 3, ring_exponent=1).collect()]
+        assert sorted(out[pid]) == sorted(exp), pid
+    assert {(cx, cy) for _, cx, cy in out[3]} == {(1, 1), (1, 2), (2, 1)}
+
+    rounds = [df for _, df in cuts if "_ok" in df.columns]
+    certified = [
+        {r["pid"] for r in df.filter(F.col("_ok") & F.col("dist").isNotNull()).select("pid").collect()}
+        for df in rounds
+    ]
+    assert len(rounds) >= 4, len(rounds)
+    assert certified[0] == {3, 4}
+    assert 2 in certified[-1] and 1 not in certified[0]
+    assert sum(len(c) for c in certified) == len(set().union(*certified)) == len(probes)
+    for plan, _ in cuts:
+        assert "LeftAnti" not in plan, plan
+
+
 def _mk_vec(spark, seed, n=64, grid=8):
     """Samples with Normals3f and Colors4b vector layers (holes included)."""
     import math

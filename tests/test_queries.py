@@ -113,6 +113,65 @@ def test_lod_cut(spark):
     assert cut1.filter(F.col("e") == 1).count() == 16
 
 
+def _lod_samples(spark):
+    """Samples at exponents 0, 2 and 5 with negative coordinates: an e=0
+    lattice over [-20, 20)^2, an e=2 lattice over [-6, 6)^2, every e=5
+    cell of [-2, 2)^2, and the e=2 cell (7, 7) whose only finer sample is
+    its child (29, 30) at e=0. height = a row number."""
+    rows = [(x, y, 0) for x in range(-20, 20, 3) for y in range(-20, 20, 5)]
+    rows += [(x, y, 2) for x in range(-6, 6, 2) for y in range(-6, 6, 3)]
+    rows += [(x, y, 5) for x in range(-2, 2) for y in range(-2, 2)]
+    rows += [(7, 7, 2), (29, 30, 0)]
+    return spark.createDataFrame(
+        [(x, y, e, float(i)) for i, (x, y, e) in enumerate(rows)],
+        "cx long, cy long, e int, height double",
+    )
+
+
+@pytest.mark.parametrize("exponents", [[0, 2, 5], None, [0, 1, 2, 3, 4, 5]])
+@pytest.mark.parametrize("min_exponent", [0, 1, 2, 3, 6])
+def test_lod_cut_matches_per_level_form(spark, lod_cut_levels, min_exponent, exponents):
+    """The one-anti-join ``lod_cut`` == its per-level form on an exponent
+    set with gaps, a coarse cell with a single finer child, cuts between
+    and above the levels, negative coordinates (ancestors by arithmetic
+    shift), the discovery path (``exponents=None``) and a superset of the
+    present exponents."""
+    s = _lod_samples(spark)
+    got = Q.lod_cut(s, min_exponent, exponents=exponents)
+    assert got.columns == s.columns
+    rows = sorted(map(tuple, got.collect()))
+    ref = lod_cut_levels(s, min_exponent, exponents=exponents)
+    assert rows == sorted(map(tuple, ref.collect()))
+    if min_exponent == 0:
+        kept = {r[:3] for r in rows}
+        assert (29, 30, 0) in kept and (7, 7, 2) not in kept
+        assert (-1, -1, 5) not in kept and (1, 1, 5) in kept
+
+
+@pytest.mark.parametrize("rel", [(0.0, 0.0), (0.5, 0.5), (1.0, 1.0)])
+@pytest.mark.parametrize("line", [
+    (0.0, 4.0, 1.0, 0.0, 4.0),    # horizontal: band edges y = 0 and y = 8
+    (-3.0, 0.0, 0.0, 1.0, 2.0),   # vertical: band edges x = -5 and x = -1
+    (1.0, -2.0, 3.0, 4.0, 2.0),   # slanted, passing through cell corners
+])
+def test_near_line_needs_no_cell_prune(spark, line, rel):
+    """``near_line`` (the exact distance test alone) == the two-phase form
+    with the band's four-corner ``node_outside`` prune, on a dense grid
+    whose cell corners lie on the band edges: for rel in [0, 1] the prune
+    drops no sample the distance test keeps (see ``near_line``)."""
+    dense = spark.range(1600).select(
+        (F.col("id") % 40 - 20).alias("cx"),
+        (F.floor(F.col("id") / 40) - 20).cast("long").alias("cy"),
+        F.lit(0).cast("int").alias("e"),
+        (F.col("id") * 1.5).alias("height"),
+    )
+    node_outside, sample_inside = Q._line_predicates(*line)
+    two_phase = Q.query_generic(dense, sample_inside, node_outside=node_outside, rel=rel)
+    got = {tuple(r) for r in Q.near_line(dense, *line, rel=rel).collect()}
+    assert got == {tuple(r) for r in two_phase.collect()}
+    assert 0 < len(got) < 1600
+
+
 def test_inside_polygon_duplicated_vertices(q10x7):
     """Polygon2d.WithoutMultiplePoints parity (Query.fs:455-458): repeated
     vertices (and an explicit closing vertex) must not distort the winding

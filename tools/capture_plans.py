@@ -14,9 +14,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 BENCH_SET = [
     "cell_encode", "inside_polygon", "near_line", "merge_dominance",
     "merge_blocks", "pyramid_blocks", "polygon_blocks", "merge_mixed_res",
-    "merge_blocks_mixed", "knn_batch", "lod_cut", "exact_dups", "lsh_pairs",
-    "jaccard_pairs", "simhash", "cosine_topk", "ann_topk",
-    "multimodal_features", "minhash", "embed_dups",
+    "merge_blocks_mixed", "knn_batch", "knn_batch_blocks", "lod_cut",
+    "exact_dups", "lsh_pairs", "jaccard_pairs", "simhash", "cosine_topk",
+    "ann_topk", "multimodal_features", "minhash", "embed_dups",
 ]
 
 
