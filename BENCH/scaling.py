@@ -13,10 +13,10 @@ instead of excusing them:
   table), staged as bucketed tables (the "crawls already in the lake" state
   a 100 TB deployment starts from);
 - merge: crawl-over-crawl ``merge_blocks`` — co-partitioned bucketed join +
-  JVM zip_with over aligned arrays, ZERO Exchange (plan-asserted in
+  numpy winner kernel over aligned arrays, ZERO Exchange (plan-asserted in
   tests/test_blocks.py), sequential memory access;
 - pyramid: ``pyramid_blocks`` — block-local rollup, zero shuffle;
-- polygon: higher-order-function count over block arrays, zero shuffle.
+- polygon: Arrow-batched numpy count over block arrays, zero shuffle.
 
 The driver launches this twice via spark-submit --py-files (e.g. local[4]
 vs local[16] — the sandbox proxy for N vs 4N executors) and reports paired
@@ -215,8 +215,8 @@ def main() -> None:
     mark("ingest_blocks", t)
 
     # --- merge: crawl-over-crawl dominance merge, Exchange-free plan + -----
-    # vectorized winner kernel (engine='kernel'; the SQL zip_with variant
-    # anti-scaled: interpreted per-element lambdas churn the shared heap)
+    # vectorized numpy winner kernel (a SQL zip_with formulation anti-scaled:
+    # interpreted per-element lambdas churn the shared heap)
     def _merge(rep: int) -> None:
         nonlocal rows
         merged = merge_blocks(
@@ -241,7 +241,7 @@ def main() -> None:
 
     steady("pyramid", _pyramid)
 
-    # --- polygon: HOF count over block arrays, zero shuffle ----------------
+    # --- polygon: numpy count over block arrays, zero shuffle --------------
     poly = [(100.0, 100.0), (3600.0, 400.0), (3000.0, 3500.0), (400.0, 3000.0)]
 
     def _polygon(rep: int) -> None:

@@ -401,7 +401,7 @@ def q_merge_blocks_mixed(spark, sf_dir):
 
 def q_merge_blocks(spark, sf_dir):
     """M1 via the BLOCK-RASTER path (operators/blocks.py): aligned-array
-    zip_with winner kernel + co-partitionable join — the exchange-free scale
+    numpy winner kernel + co-partitionable join — the exchange-free scale
     merge. Same semantics as q_merge_dominance through a disjoint execution
     path, checked against the same oracle."""
     m = merge_blocks(

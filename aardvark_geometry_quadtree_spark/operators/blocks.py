@@ -15,8 +15,8 @@ re-expressed in Spark:
   sibling of :func:`..build.pack_tiles` (which keeps tight per-tile windows
   for storage; blocks are full-size and aligned so two crawls' arrays line
   up element-for-element);
-- the same-exponent dominance merge becomes a co-partitioned join plus
-  JVM-side ``zip_with`` over aligned arrays (:func:`merge_blocks`) — no
+- the same-exponent dominance merge becomes a co-partitioned join plus a
+  numpy winner kernel over aligned arrays (:func:`merge_blocks`) — no
   hash aggregation, sequential memory access, zero Exchange when both
   sides are bucketed on the block key (:func:`save_blocks_bucketed`);
 - LoD pyramids up to ``log2(block width)`` levels are BLOCK-LOCAL — every
@@ -488,30 +488,24 @@ def merge_blocks(
     second: DataFrame,
     dominance: "Dominance | str" = "first",
     layers: list[str] | None = None,
-    engine: str = "kernel",
 ) -> DataFrame:
     """SAME-EXPONENT dominance merge over aligned blocks — zero hash
     aggregation.
 
     Plan: FULL OUTER equi-join on the block key (Exchange-free on bucketed
     inputs, :func:`save_blocks_bucketed`), then per-cell winner selection
-    over the aligned arrays. Two interchangeable winner engines, identical
-    semantics (differential-tested):
+    over the aligned arrays: vectorized numpy ``np.where`` over the joined
+    arrays in an Arrow-batched ``mapInPandas`` (:func:`_merge_blocks_kernel`).
+    A SQL ``zip_with`` formulation was measured and dropped: Spark evaluates
+    higher-order-function lambdas interpreted per ELEMENT, whose boxed-object
+    churn on the shared JVM heap anti-scaled at 16 threads (7.3s -> 9.6s
+    going 4 -> 16 cores, cpu-ratio 2.1x) exactly like the hash aggregation
+    it replaced. Emits ``n_samples`` (occupied-cell count) for free.
 
-    - ``engine='kernel'`` (default): vectorized numpy ``np.where`` over the
-      joined arrays in an Arrow-batched ``mapInPandas`` — measured the
-      scale winner: Spark evaluates SQL higher-order-function lambdas
-      interpreted per ELEMENT, whose boxed-object churn on the shared JVM
-      heap anti-scaled at 16 threads (7.3s -> 9.6s going 4 -> 16 cores,
-      cpu-ratio 2.1x) exactly like the hash aggregation it replaced; the
-      kernel does the same arithmetic in C over Arrow batches and keeps the
-      heap quiet. Emits ``n_samples`` (occupied-cell count) for free.
-    - ``engine='sql'``: pure-JVM ``zip_with`` formulation — no Python
-      workers at all; right for small merges inside larger SQL-only plans.
-      CONTRACT: scalar layers only (loud ValueError on vector layers) —
-      a channel-aware ``zip_with`` would interpret its lambda per element
-      over ``w*w*k`` buffers, exactly the anti-scaling path the kernel
-      engine exists to avoid, so vector-layer merges are kernel-only.
+    Both sides must be packed with the same ``bits``: a two-sided block row
+    whose widths differ raises a named ``ValueError``. One-sided rows cannot
+    be checked without an extra job, so a side whose block keys never meet
+    the other's passes through unchecked.
 
     Semantics == ``merge._merge_same_exponent`` (winner-per-cell at one
     shared exponent, Query.fs:79-196): where both sides have the cell, the
@@ -559,61 +553,7 @@ def merge_blocks(
         )
 
     j = side_cols(first, "a").join(side_cols(second, "b"), key, "full_outer")
-    if engine == "kernel":
-        return _merge_blocks_kernel(
-            j, layers, int_layers, win_first, vector_specs, t1,
-        )
-    if engine != "sql":
-        raise ValueError(f"merge_blocks: unknown engine '{engine}'")
-    if vector_specs:
-        raise ValueError(
-            "merge_blocks engine='sql' does not support vector layers "
-            f"({sorted(vector_specs)}); use engine='kernel'"
-        )
-
-    only_a = F.col("_occ_b").isNull()
-    only_b = F.col("_occ_a").isNull()
-    wtag = "a" if win_first else "b"  # the side whose presence wins a cell
-
-    def merged_arr(value_col_a: str, value_col_b: str) -> F.Column:
-        # winner-side occupancy decides per element; zip the winner's occ
-        # with its value array so zip_with's 2-array limit suffices
-        win_val, lose_val = (value_col_a, value_col_b) if win_first else (value_col_b, value_col_a)
-        z = F.arrays_zip(F.col(f"_occ_{wtag}").alias("o"), F.col(win_val).alias("v"))
-        return F.zip_with(
-            z, F.col(lose_val),
-            lambda x, y: F.when(x.getField("o"), x.getField("v")).otherwise(y),
-        )
-
-    out = [F.col(k) for k in key]
-    out.append(F.coalesce(F.col("_w_a"), F.col("_w_b")).alias("w"))
-    occ = (
-        F.when(only_a, F.col("_occ_a"))
-        .when(only_b, F.col("_occ_b"))
-        .otherwise(F.zip_with(F.col("_occ_a"), F.col("_occ_b"), lambda x, y: x | y))
-    )
-    # same output schema as engine='kernel' (interchangeability contract):
-    # n_samples = occupied-cell count. size(filter(...)) is a HOF — fine at
-    # the small-array sizes this engine is documented for.
-    out.append(F.size(F.filter(occ, lambda x: x)).cast("long").alias("n_samples"))
-    out.append(occ.alias("occ"))
-    for n in layers:
-        a_n, b_n = f"_a_{n}", f"_b_{n}"
-        val = (
-            F.when(only_a, F.col(a_n))
-            .when(only_b, F.col(b_n))
-            .otherwise(merged_arr(a_n, b_n))
-        )
-        out.append(val.alias(n))
-        if n in int_layers:
-            am, bm = f"_a_{n}_mask", f"_b_{n}_mask"
-            m = (
-                F.when(only_a, F.col(am))
-                .when(only_b, F.col(bm))
-                .otherwise(merged_arr(am, bm))
-            )
-            out.append(m.alias(f"{n}_mask"))
-    return j.select(*out)
+    return _merge_blocks_kernel(j, layers, int_layers, win_first, vector_specs, t1)
 
 
 def _stack(series: pd.Series, dtype) -> np.ndarray:
@@ -628,7 +568,7 @@ def _merge_blocks_kernel(
     sql_types: dict[str, str] | None = None,
 ) -> DataFrame:
     """Winner selection as a vectorized numpy kernel over the joined rows
-    (see :func:`merge_blocks` engine='kernel'). Partition-local — adds no
+    (see :func:`merge_blocks`). Partition-local — adds no
     Exchange to the join plan.
 
     Batched: rows of an Arrow batch are split three ways (only-a, only-b,
@@ -667,6 +607,13 @@ def _merge_blocks_kernel(
         return pd.DataFrame(out)
 
     def _two_sided(g: pd.DataFrame) -> pd.DataFrame:
+        wa, wb = g["_w_a"].to_numpy(np.int64), g["_w_b"].to_numpy(np.int64)
+        if (wa != wb).any():
+            i = int(np.argmax(wa != wb))
+            raise ValueError(
+                "merge_blocks: block widths differ between sides "
+                f"(w={wa[i]} vs w={wb[i]}); pack both sides with the same bits"
+            )
         a = _stack(g["_occ_a"], bool)
         b = _stack(g["_occ_b"], bool)
         # win marks cells where the DOMINANT side is present: its value wins
@@ -1483,7 +1430,6 @@ def sample_positions_blocks(
     exponents: list[int] | None = None,
     layers: list[str] | None = None,
     layer_types: dict[str, str] | None = None,
-    broadcast_positions: bool = True,
 ) -> DataFrame:
     """Point lookup routed DIRECTLY to block rows — the block-path
     equivalent of ``query.sample_positions`` (reference quadrant routing,
@@ -1492,7 +1438,7 @@ def sample_positions_blocks(
 
     Per probe and exponent the containing cell's block key is computed
     arithmetically, probes equi-join the block table on ``(bx, by, e)``
-    (broadcast by default), and the cell's occupancy + layer values are
+    (broadcast), and the cell's occupancy + layer values are
     read by JVM ``element_at`` at the in-block index — no ``unpack_blocks``
     explode anywhere: a probe batch touches only the block rows it routes
     to, at one array-index read per layer.
@@ -1532,10 +1478,8 @@ def sample_positions_blocks(
             F.shiftright(F.col("cy"), bits).alias("by"),
         )
         cand = c if cand is None else cand.unionByName(c)
-    if broadcast_positions:
-        cand = F.broadcast(cand)
 
-    j = blocks.join(cand, ["bx", "by", "e"], "inner")
+    j = blocks.join(F.broadcast(cand), ["bx", "by", "e"], "inner")
     # 1-based in-block index of the probed cell
     idx = (
         (F.col("cy") - F.col("by") * F.col("w")) * F.col("w")

@@ -335,59 +335,6 @@ def _merge_same_exponent(a: DataFrame, b: DataFrame, dominance: Dominance, layer
     return u.groupBy("cx", "cy", "e").agg(*aggs)
 
 
-def save_bucketed_samples(
-    samples: DataFrame, table_name: str, n_buckets: int = 64
-) -> None:
-    """Persist a samples set as a BUCKETED table on the cell key.
-
-    Bucketing is the co-location contract for repeated merges at 100 TB:
-    two tables bucketed identically on (cx, cy, e) join/merge with ZERO
-    exchange — the per-bucket files line up, so a crawl-over-crawl merge
-    reads both sides bucket-by-bucket instead of shuffling either
-    (``merge_same_exponent_bucketed`` + test assert the Exchange-free plan).
-    """
-    (
-        samples.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, "cx", "cy", "e")
-        .sortBy("cx", "cy", "e")
-        .saveAsTable(table_name)
-    )
-
-
-def merge_same_exponent_bucketed(
-    first: DataFrame,
-    second: DataFrame,
-    dominance: Dominance | str = Dominance.FirstDominates,
-    layers: list[str] | None = None,
-) -> DataFrame:
-    """Same-exponent merge as a co-partitioned FULL OUTER JOIN.
-
-    Semantically identical to the winner-per-cell aggregation
-    (``_merge_same_exponent``): on a cell present in both sides the
-    dominance-named side's row wins WHOLESALE (a NULL hole in the winner
-    stays a hole — Query.fs:79-196 per-sample dominance); cells present on
-    one side pass through. The join form exists for BUCKETED inputs, where
-    both sides already share the (cx, cy, e) layout and the plan contains
-    no Exchange at all — the union+groupBy form always reshuffles because
-    Union discards bucketing info.
-    """
-    dominance = Dominance(dominance)
-    win_first = dominance in (Dominance.FirstDominates, Dominance.MoreDetailedOrFirst)
-    key = ["cx", "cy", "e"]
-    layers = layers or [c for c in first.columns if c not in key and c != "patch_id"]
-    a = first.select(*key, *layers, F.lit(1).alias("_ea"))
-    b = second.select(
-        *key, *[F.col(c).alias(f"_b_{c}") for c in layers], F.lit(1).alias("_eb")
-    )
-    j = a.join(b, key, "full_outer")
-    winner_is_a = F.col("_ea").isNotNull() if win_first else F.col("_eb").isNull()
-    cols = [F.col(k) for k in key]
-    for c in layers:
-        cols.append(F.when(winner_is_a, F.col(c)).otherwise(F.col(f"_b_{c}")).alias(c))
-    return j.select(*cols)
-
-
 # ---------------------------------------------------------------------------
 # M2/M3: same-resolution merge and multi-resolution flatten (Builder path)
 # ---------------------------------------------------------------------------

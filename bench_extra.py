@@ -53,69 +53,9 @@ def ab_narrow(reps: int = 3) -> None:
     print(json.dumps(out))
 
 
-def ab_bucketed(reps: int = 3) -> None:
-    """VERDICT r5 #7: bucketed zero-Exchange same-exponent merge vs the
-    shuffled union+groupBy form, at >= 4M cells. Prints one JSON line."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from aardvark_geometry_quadtree_spark.operators.merge import (
-        Dominance, merge_same_exponent_bucketed, merge_samples,
-    )
-    from aardvark_geometry_quadtree_spark.session import get_spark
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    n_cells = int(os.environ.get("SPARK_GRAFT_AB_CELLS", "4000000"))
-    spark = get_spark(app_name="qt-ab-bucketed", master=f"local[{cpus}]",
-                      shuffle_partitions=max(8, int(cpus)))
-    spark.sql("DROP TABLE IF EXISTS qt_ab_b1")
-    spark.sql("DROP TABLE IF EXISTS qt_ab_b2")
-
-    def synth(tag: int):
-        side = int(n_cells ** 0.5)
-        return (
-            spark.range(n_cells)
-            .select(
-                (F.col("id") % side).alias("cx"),
-                (F.col("id") / side).cast("long").alias("cy"),
-                F.lit(0).cast("int").alias("e"),
-                (F.xxhash64("id", F.lit(tag)) % 1000).cast("double").alias("height"),
-            )
-        )
-
-    from aardvark_geometry_quadtree_spark.operators.merge import save_bucketed_samples
-
-    save_bucketed_samples(synth(1), "qt_ab_b1", n_buckets=int(cpus))
-    save_bucketed_samples(synth(2), "qt_ab_b2", n_buckets=int(cpus))
-    b1, b2 = spark.table("qt_ab_b1"), spark.table("qt_ab_b2")
-    out: dict = {"n_cells": n_cells, "cpus": int(cpus)}
-    arms = {
-        "bucketed_join": lambda: merge_same_exponent_bucketed(b1, b2, Dominance.FirstDominates),
-        "shuffled_agg": lambda: merge_samples(
-            b1, b2, Dominance.FirstDominates, layers=["height"],
-            first_exponents=[0], second_exponents=[0],
-        ),
-    }
-    for name, mk in arms.items():
-        times = []
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            mk().write.format("noop").mode("overwrite").save()
-            times.append(round(time.perf_counter() - t0, 3))
-        plan = mk()._jdf.queryExecution().executedPlan().toString()
-        out[name] = {
-            "min": min(times), "samples": times,
-            "n_exchanges": plan.count("Exchange"),
-        }
-    print(json.dumps(out))
-
-
 def main() -> None:
-    if len(sys.argv) > 1 and sys.argv[1] in ("ab_narrow", "ab_bucketed"):
-        mode = sys.argv[1]
-        reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-        (ab_narrow if mode == "ab_narrow" else ab_bucketed)(reps)
+    if len(sys.argv) > 1 and sys.argv[1] == "ab_narrow":
+        ab_narrow(int(sys.argv[2]) if len(sys.argv) > 2 else 3)
         return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")

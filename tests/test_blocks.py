@@ -61,33 +61,40 @@ def test_pack_unpack_roundtrip(spark):
     assert _cells(back) == _cells(s)
 
 
-@pytest.mark.parametrize("engine", ["kernel", "sql"])
 @pytest.mark.parametrize("dom", list(Dominance))
-def test_merge_blocks_matches_sample_merge(spark, dom, engine):
+def test_merge_blocks_matches_sample_merge(spark, dom):
     a = _mk(spark, 1)
     b = _mk(spark, 2)
     expect = _cells(
         merge_samples(a, b, dom, layers=["height", "n"],
                       first_exponents=[0], second_exponents=[0])
     )
-    got = _cells(
-        B.unpack_blocks(
-            B.merge_blocks(B.pack_blocks(a, 3), B.pack_blocks(b, 3), dom, engine=engine)
-        )
-    )
+    m = B.merge_blocks(B.pack_blocks(a, 3), B.pack_blocks(b, 3), dom)
+    got = _cells(B.unpack_blocks(m))
     assert got == expect
+    # n_samples is each merged block's occupied-cell count
+    assert all(r["n_samples"] == sum(r["occ"]) for r in m.collect())
 
 
-@pytest.mark.parametrize("engine", ["kernel", "sql"])
-def test_merge_blocks_winner_hole_stays_hole(spark, engine):
+def test_merge_blocks_winner_hole_stays_hole(spark):
     # wholesale winner semantics: first side present with a NULL layer value
     # beats a defined second-side value (Query.fs:79-196 per-sample rule)
     a = spark.createDataFrame([(0, 0, 0, None, None)], "cx long, cy long, e int, height double, n bigint")
     b = spark.createDataFrame([(0, 0, 0, 9.0, 9)], "cx long, cy long, e int, height double, n bigint")
     got = _cells(B.unpack_blocks(
-        B.merge_blocks(B.pack_blocks(a, 2), B.pack_blocks(b, 2), "first", engine=engine)
+        B.merge_blocks(B.pack_blocks(a, 2), B.pack_blocks(b, 2), "first")
     ))
     assert got == {(0, 0, 0): (None, None)}
+
+
+def test_merge_blocks_width_mismatch_named_error(spark):
+    """Sides packed at different bits meet on a numerically equal block key
+    (bx = cx >> bits): the kernel names the mismatch instead of failing to
+    broadcast the two sides' arrays."""
+    a = B.pack_blocks(_mk(spark, 1), 2)
+    b = B.pack_blocks(_mk(spark, 2), 3)
+    with pytest.raises(Exception, match=r"block widths differ between sides \(w=4 vs w=8\)"):
+        B.merge_blocks(a, b, "first").collect()
 
 
 def test_pyramid_blocks_matches_build_pyramid(spark):
@@ -208,19 +215,6 @@ def test_polygon_blocks_parity_rel_zero_boundary(spark):
     assert (8, 4, 0) in _cells(got)  # the boundary cell itself
     n = B.polygon_count_blocks(blk, poly, rel=(0.0, 0.0)).collect()[0]["n_inside"]
     assert n == exp.count()
-
-
-def test_merge_blocks_sql_engine_emits_n_samples(spark):
-    """engine='sql' and engine='kernel' share one output schema, including
-    the occupied-cell count."""
-    a = B.pack_blocks(_mk(spark, 3), 3)
-    b = B.pack_blocks(_mk(spark, 4), 3)
-    ms = B.merge_blocks(a, b, "first", engine="sql")
-    mk = B.merge_blocks(a, b, "first", engine="kernel")
-    assert [c for c in ms.columns] == [c for c in mk.columns]
-    got = {(r["bx"], r["by"], r["e"]): r["n_samples"] for r in ms.collect()}
-    exp = {(r["bx"], r["by"], r["e"]): r["n_samples"] for r in mk.collect()}
-    assert got == exp
 
 
 def test_bucketed_merge_blocks_no_exchange(spark, tmp_path):
@@ -456,13 +450,6 @@ def test_vector_layers_block_merge_matches_sample_merge(spark, dom):
         B.merge_blocks(B.pack_blocks(a, 2), B.pack_blocks(b, 2), dom)
     )
     assert _vcells(got) == _vcells(exp)
-
-
-def test_vector_layers_sql_engine_rejected(spark):
-    a = B.pack_blocks(_mk_vec(spark, 5), 2)
-    b = B.pack_blocks(_mk_vec(spark, 6), 2)
-    with pytest.raises(ValueError, match="vector layers"):
-        B.merge_blocks(a, b, "first", engine="sql")
 
 
 @pytest.mark.parametrize("dom", ["first", "more_detailed_or_second"])

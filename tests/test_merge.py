@@ -192,39 +192,6 @@ def test_merge_random_stress_no_throw(spark):
     assert math.isfinite(sum(r["height"] for r in rows))
 
 
-def test_bucketed_merge_no_shuffle_and_parity(spark, tmp_path):
-    """Bucketed co-location (the 100 TB crawl-over-crawl path): two tables
-    bucketed on (cx, cy, e) merge via merge_same_exponent_bucketed with NO
-    Exchange in the plan, and values match the winner-agg merge exactly —
-    including NULL holes carried by the winning side."""
-    from aardvark_geometry_quadtree_spark.operators.merge import (
-        merge_same_exponent_bucketed, save_bucketed_samples)
-
-    rows_a = [(x, y, 0, float(x + y) if (x + y) % 3 else None) for x in range(8) for y in range(8)]
-    rows_b = [(x, y, 0, 100.0 + x) for x in range(4, 12) for y in range(4, 12)]
-    a = spark.createDataFrame(rows_a, "cx long, cy long, e int, height double")
-    b = spark.createDataFrame(rows_b, "cx long, cy long, e int, height double")
-    try:
-        save_bucketed_samples(a, "bm_a", n_buckets=8)
-        save_bucketed_samples(b, "bm_b", n_buckets=8)
-        ta, tb = spark.table("bm_a"), spark.table("bm_b")
-
-        for dom in (Dominance.FirstDominates, Dominance.SecondDominates):
-            m = merge_same_exponent_bucketed(ta, tb, dom)
-            plan = m._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in plan, f"bucketed merge shuffled under {dom}"
-            got = {(r.cx, r.cy): r.height for r in m.collect()}
-            ref = merge_samples(ta, tb, dom, first_exponents=[0], second_exponents=[0])
-            want = {(r.cx, r.cy): r.height for r in ref.collect()}
-            assert got == want, dom
-            # winner's NULL hole survives even when the loser has a value
-            if dom == Dominance.FirstDominates:
-                assert got[(4, 5)] is None  # (4+5)%3==0 -> hole in a, value in b
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bm_a")
-        spark.sql("DROP TABLE IF EXISTS bm_b")
-
-
 def test_validate_hints_fails_loudly(spark):
     # wrong hints claim one common exponent -> fast path would mis-merge; the
     # welded assert errors the job instead of silently collapsing resolutions
